@@ -126,11 +126,3 @@ def salted_counts(df: DataFrame, key_col: str, n_salts: int = 32,
         .agg(F.count(F.lit(1)).alias("__partial"))
     )
     return stage1.groupBy(key_col).agg(F.sum("__partial").alias(out_col))
-
-
-def program_counts_salted(enriched: DataFrame, n_salts: int = 32) -> DataFrame:
-    return salted_counts(enriched, "program_name", n_salts)
-
-
-def host_counts_salted(enriched: DataFrame, n_salts: int = 32) -> DataFrame:
-    return salted_counts(enriched, "host", n_salts)

@@ -192,9 +192,3 @@ def gen_tokens_df(spark, n_rows: int, seed: int = 42, partitions: int | None = N
         spark.range(0, n_rows, numPartitions=partitions)
         .mapInPandas(gen_batches, "doc_id string, tokens array<int>, n_tok int, source string")
     )
-
-
-def write_corpus(spark, out_dir: str, sf: float, seed: int = 42):
-    df = gen_tokens_df(spark, rows_for_sf(sf), seed)
-    df.write.mode("overwrite").parquet(out_dir)
-    return out_dir

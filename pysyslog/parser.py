@@ -148,11 +148,6 @@ def _field_value(msg: dict, f: str, emit_parsed_json: bool):
     return str(v) if v is not None and not isinstance(v, str) else v
 
 
-def record_to_row(msg: dict, emit_parsed_json: bool = False) -> tuple:
-    """Parsed record dict -> tuple aligned with SYSLOG_SCHEMA."""
-    return tuple(_field_value(msg, f, emit_parsed_json) for f in FIELD_NAMES)
-
-
 # Per-worker parser cache: one compiled SyslogParser per options tuple,
 # reused across all Arrow batches (⇔ the reference's precompiled %RE).
 _PARSER_CACHE: dict = {}

@@ -7,20 +7,22 @@ jobs: a single scan feeds every sink and the writer splits files by
 partition value.  In this sandbox the sink format is parquet; on a real
 cluster the same DataFrame goes to `.writeTo(table)` (Iceberg) with
 identity partition transforms — the plan shape is unchanged.
-
-Per-program sinks use the same mechanism keyed by program_name, with a
-cardinality cap (unknown/rare programs route to '__other') so a hostile
-corpus cannot create unbounded partitions.
 """
 
 from __future__ import annotations
 
 import os
+import warnings
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
 
 ROUTE_COLS = ["facility_name", "severity_name"]
+
+# at or below 2 × this many input rows no sink is sized and every sink
+# is written as one file (tests patch it down to exercise the salt)
+MIN_SALT_ROWS = 50_000
 
 # Parquet dictionary encoding is disabled per-column for the
 # high-cardinality text/identity fields of the enriched schema: the
@@ -53,36 +55,31 @@ def route_by_facility_severity(
     rows_hint: int | None = None,
     iceberg_table: str | None = None,
 ) -> str:
-    """Repartitions on (sink keys, bounded salt) before the partitioned
-    write: without it every write task opens a parquet writer for every
-    sink it sees (tasks × sinks tiny files — measured 4x slower at
-    bench scale); with it each sink is written by ≤ files_per_sink
-    tasks, and the salt keeps one hot sink from serializing into a
-    single task.
+    """One partitioned write that fans the input out into one sink per
+    (facility, severity).  The input is repartitioned on (sink keys,
+    salt) first: without that every write task opens a parquet writer
+    for every sink it sees (tasks × sinks tiny files, measured 4x slower
+    at bench scale); with it each sink is written by `width` tasks.
 
-    The salt granularity is sized to the DATA, per sink (optimization
-    guide §2.5 hot keys / §6 small files).  With `rows_hint` (every
-    pipeline caller), sink sizes are measured with one cheap partial-agg
-    count over the input — ≤ sinks rows collected, callers have already
-    persisted the frame — and each sink gets its own salt width:
-    ceil(sink rows / target) for sinks above 2×target, width 1
-    otherwise, where target = min(max_records_per_file,
-    total // (2 × parallelism)).  A hot sink (the PRI-less user/notice
-    default is 22% of the generated corpus) thus spreads across ~2×
-    parallelism write tasks instead of serializing into one straggler
-    task, while small sinks keep width 1 — one right-sized file each —
-    at EVERY scale.  A uniform data-sized salt (the previous design,
-    ceil(rows_hint / 2×max_records_per_file) for all sinks) is wrong at
-    both ends: at small volume a constant oversized salt shatters every
-    sink into sub-file-size pieces (measured: salt 4 at 1.2M rows → 636
-    files of ~1900 rows, 1.6x slower than 191 right-sized files), and
-    at 10^12 rows a global width of ~250k sprays each TINY sink across
-    every write task — O(sinks × tasks) tiny files.  Per-sink widths
-    are the only shape that is simultaneously straggler-free and
-    shatter-free; the counting pass measured 0.7-0.8s at 600k rows and
-    the A/B (interleaved, 4 reps) read write-incl-count 2.77-2.98s vs
-    uniform 2.91-3.22s.  Explicit `files_per_sink` overrides with a
-    uniform salt (legacy behavior; `None` with no hint keeps 4).
+    The salt width is per sink.  `files_per_sink` forces one uniform
+    width (4 when neither it nor `rows_hint` is given).  Otherwise every
+    sink gets width 1, i.e. one file, unless `rows_hint` exceeds
+    2 × MIN_SALT_ROWS: then one partial-agg count job sizes the sinks,
+    and a sink holding more than 2 × target rows gets width
+    ceil(rows / target), capped at 2 × parallelism, where target =
+    min(max_records_per_file, total // (2 × parallelism)).  A hot sink
+    thus spreads across write tasks instead of serializing into one
+    straggler, while small sinks keep one right-sized file.
+
+    Measured on 4 vCPU: at 40k lines the sizing job took 0.28 s, two of
+    the route's four jobs, and no sink reached 2 × target, hence the
+    floor.  At 600k lines (persisted input, warm) it took 0.24 s of a
+    5.8 s route, and a uniform width of 1 was 5.3 s: on 4 cores a sink
+    must hold over 1/parallelism of the rows to salt, which the
+    generator's hottest sink (22%) does not.  The adaptive width earns
+    its job where parallelism is high or one sink dominates.  An
+    unpersisted input would re-run its whole lineage (the parse UDF)
+    for the count, so it is written at width 1 with a warning.
 
     With an Iceberg runtime on the classpath and `iceberg_table` given,
     the identical DataFrame goes through `writeTo(...)` with identity
@@ -94,26 +91,18 @@ def route_by_facility_severity(
         enriched.withColumn("facility_name", F.coalesce("facility_name", F.lit("__unknown")))
         .withColumn("severity_name", F.coalesce("severity_name", F.lit("__unknown")))
     )
-    if files_per_sink is None and rows_hint is not None:
-        par = enriched.sparkSession.sparkContext.defaultParallelism
-        counts = base.groupBy("facility_name", "severity_name").count().collect()
-        total = sum(r["count"] for r in counts) or rows_hint
-        target = max(1, min(max_records_per_file, total // (2 * par)))
-        # at most total/(2*target) ≈ parallelism sinks can exceed
-        # 2*target, so this when-chain stays short at any scale
-        width = F.lit(1)
-        for r in counts:
-            if r["count"] > 2 * target:
-                width = F.when(
-                    (F.col("facility_name") == r["facility_name"])
-                    & (F.col("severity_name") == r["severity_name"]),
-                    F.lit(min(-(-r["count"] // target), 2 * par)),
-                ).otherwise(width)
-        salt = F.pmod(F.xxhash64("doc_id"), width)
-    else:
-        if files_per_sink is None:
-            files_per_sink = 4
-        salt = F.pmod(F.xxhash64("doc_id"), F.lit(files_per_sink))
+    width = F.lit(1)
+    if files_per_sink is not None or rows_hint is None:
+        width = F.lit(4 if files_per_sink is None else files_per_sink)
+    elif rows_hint > 2 * MIN_SALT_ROWS:
+        if enriched.storageLevel == StorageLevel.NONE:
+            warnings.warn(
+                "route input is not persisted: sizing its sinks would "
+                "re-run its lineage, so every sink is written as one file",
+                stacklevel=2)
+        else:
+            width = _sink_widths(base, max_records_per_file)
+    salt = F.pmod(F.xxhash64("doc_id"), width)
 
     path = os.path.join(out_dir, "by_facility_severity")
     routed = base.repartition(
@@ -125,31 +114,22 @@ def route_by_facility_severity(
     )
 
 
-def route_by_program(
-    enriched: DataFrame,
-    out_dir: str,
-    top_programs: int = 64,
-    mode: str = "overwrite",
-) -> str:
-    """Per-program sinks, capped to the top-N programs by volume (the
-    long tail routes to '__other').  The top-N set is computed with a
-    salted count so a hot program doesn't skew the ranking shuffle."""
-    from .aggregate import salted_counts
-
-    path = os.path.join(out_dir, "by_program")
-    top = [
-        r["program_name"]
-        for r in salted_counts(enriched.filter(F.col("program_name").isNotNull()),
-                               "program_name")
-        .orderBy(F.desc("n"), "program_name")
-        .limit(top_programs)
-        .collect()
-    ]
-    routed = enriched.withColumn(
-        "program_sink",
-        F.when(F.col("program_name").isin(top), F.col("program_name")).otherwise(
-            F.lit("__other")
-        ),
-    )
-    routed.write.mode(mode).partitionBy("program_sink").parquet(path)
-    return path
+def _sink_widths(base: DataFrame, max_records_per_file: int):
+    """Per-sink salt width as a column expression: one count job over
+    the sink keys (≤ sinks rows collected), then width ceil(rows /
+    target) for each sink above 2 × target, width 1 for the rest."""
+    par = base.sparkSession.sparkContext.defaultParallelism
+    counts = base.groupBy("facility_name", "severity_name").count().collect()
+    total = sum(r["count"] for r in counts)
+    target = max(1, min(max_records_per_file, total // (2 * par)))
+    # at most total/(2*target) ≈ parallelism sinks can exceed
+    # 2*target, so this when-chain stays short at any scale
+    width = F.lit(1)
+    for r in counts:
+        if r["count"] > 2 * target:
+            width = F.when(
+                (F.col("facility_name") == r["facility_name"])
+                & (F.col("severity_name") == r["severity_name"]),
+                F.lit(min(-(-r["count"] // target), 2 * par)),
+            ).otherwise(width)
+    return width
