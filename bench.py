@@ -297,9 +297,9 @@ def make_spark(cpus: int):
         # task (skewed sink, GC pause) doesn't gate the whole stage —
         # and the count GROWS with the cluster, as it must at scale
         .config("spark.sql.shuffle.partitions", str(max(cpus * 4, 8)))
-        # commit renames inside tasks (v2), not serially on the driver:
-        # the partitioned route write produces O(sinks × salt) files and
-        # a driver-side O(files) commit flattens scaling
+        # commit renames inside tasks (v2) for the session's other
+        # writes; the route write does not use it, it sets v1 per write
+        # (see iceberg.write_partitioned)
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         # small corpus files must still fan out across all cores at the
         # SCAN, so parallelism comes from the read instead of a
@@ -400,7 +400,7 @@ def pipeline_run(spark, n_rows: int, out_dir: str, warmup: bool = True,
         # Python worker, leaving worker startup inside the first timed
         # pass (measured as a 3-4x outlier)
         w = transform(tokens.limit(max(n_rows // 20, 2000)).repartition(cpus),
-                      opts).drop("tokens", "message_raw").persist()
+                      opts).persist()
         w.count()
         route_by_facility_severity(w, os.path.join(out_dir, "warmup"),
                                    rows_hint=n_rows)
@@ -414,11 +414,7 @@ def pipeline_run(spark, n_rows: int, out_dir: str, warmup: bool = True,
         # files and maxPartitionBytes=8m splits the scan across cores —
         # a repartition here would shuffle the whole raw-token corpus
         # for nothing (measured: it flattened 2->8 scaling)
-        enriched = (
-            transform(tokens, opts)
-            .drop("tokens", "message_raw")
-            .persist()
-        )
+        enriched = transform(tokens, opts).persist()
         n = enriched.count()
         t_parse = time.time() - t0
 
@@ -430,7 +426,7 @@ def pipeline_run(spark, n_rows: int, out_dir: str, warmup: bool = True,
 
         t2 = time.time()
         # ONE shuffled aggregate feeds hourly + sink totals; only the
-        # salted host counts re-scan the input (different key)
+        # host counts re-scan the input (different key)
         base, hourly, sinks = pipeline_counts(enriched)
         base = base.persist()
         agg_rows = hourly.count()

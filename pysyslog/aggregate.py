@@ -1,32 +1,21 @@
 """Aggregation stage: per-sink counts + facility×severity×hour windows,
-with explicit skew handling.
+and per-key counts for Zipf-skewed keys.
 
 ⇔ BASELINE.json north_star "aggregate (counts per sink, per
 facility×severity×hour window) ... salted keys for skewed
-hosts/programs".  facility×severity is low-cardinality (≤192 groups) so
-Spark's partial (map-side) aggregation already reduces each input
-partition to ≤192 rows before the shuffle — salting is unnecessary
-there.  Host/program keys are Zipf-skewed, so `salted_counts` runs the
-canonical two-stage salted aggregation for them: stage 1 groups on
-(key, salt) spreading a hot key over N reducers, stage 2 merges the ≤N
-partials per key.  Results are identical to a direct groupBy; only the
-shuffle layout changes.
+hosts/programs".  Every aggregate here is a count, which Spark computes
+in parts: the map-side partial aggregation reduces each input partition
+to at most one row per key before the one shuffle, so a hot host or
+program reaches the reducers as ≤ (map partitions) partial rows, never
+as its raw rows.  That partial step is the skew handling for
+host/program keys (tests/test_plans.py pins it); a salt in front of it
+only added a second shuffle.  The route's per-sink salt
+(route.route_by_facility_severity) covers the skewed write.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, DataType, MapType, StructType
-
-
-def _has_map(dt: DataType) -> bool:
-    if isinstance(dt, MapType):
-        return True
-    if isinstance(dt, ArrayType):
-        return _has_map(dt.elementType)
-    if isinstance(dt, StructType):
-        return any(_has_map(f.dataType) for f in dt.fields)
-    return False
 
 
 def hourly_facility_severity_counts(enriched: DataFrame) -> DataFrame:
@@ -89,40 +78,9 @@ def pipeline_counts(enriched: DataFrame):
     return base, hourly, sinks
 
 
-def salted_counts(df: DataFrame, key_col: str, n_salts: int = 32,
-                  out_col: str = "n") -> DataFrame:
-    """Two-stage salted count-by-key for Zipf-skewed keys.
-
-    Stage 1 shuffles on (key, salt) — a hot key spreads over `n_salts`
-    reducers; stage 2 shuffles the ≤n_salts partials per key.  Total
-    stage-2 input is ≤ n_salts × |distinct keys|, independent of row
-    count, so the plan scales with data volume while no reducer ever
-    receives a whole hot key.
-    """
-    # salt must be DETERMINISTIC per row: a task retry recomputes its
-    # partition, and a salt derived from monotonically_increasing_id()
-    # would assign rows to different stage-1 groups across attempts
-    # (indeterminate shuffle stage → job abort / miscounted partials).
-    # Hashing the row content is stable under recompute.  MAP columns
-    # are excluded (Spark forbids hashing maps — element order varies);
-    # the remaining columns still spread a hot key's rows uniformly.
-    # CAVEAT: byte-identical salt inputs hash to ONE salt value, so a
-    # flood of duplicate values would re-concentrate.  Every table in
-    # this engine carries a physically-unique column (doc_id / line_no
-    # / event_id), so hashing just that column spreads uniformly —
-    # hashing the whole ~30-column enriched row costs ~30 hashes per
-    # input row for no extra spread.  A schema without a unique column
-    # falls back to hashing every hashable column (uniqueness caveat
-    # applies there).
-    names = {f.name for f in df.schema.fields}
-    unique = [c for c in ("doc_id", "line_no", "event_id") if c in names]
-    hashable = unique or [
-        f.name for f in df.schema.fields if not _has_map(f.dataType)
-    ]
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in hashable]), F.lit(n_salts))
-    stage1 = (
-        df.withColumn("__salt", salt)
-        .groupBy(key_col, "__salt")
-        .agg(F.count(F.lit(1)).alias("__partial"))
-    )
-    return stage1.groupBy(key_col).agg(F.sum("__partial").alias(out_col))
+def salted_counts(df: DataFrame, key_col: str, out_col: str = "n") -> DataFrame:
+    """Count-by-key for Zipf-skewed keys: one groupBy, whose partial
+    count turns a hot key into at most one row per map partition before
+    the only shuffle (see the module docstring).  perfbench imports it
+    and names a span after it, so the name stays."""
+    return df.groupBy(key_col).agg(F.count(F.lit(1)).alias(out_col))

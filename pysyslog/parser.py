@@ -956,6 +956,15 @@ def _get_parser(options: ParserOptions) -> SyslogParser:
     return p
 
 
+def _plain_fields(field_names) -> list[str]:
+    """Hot-path field layout: the handful of special fields get explicit
+    slots; everything else is a plain dict get.  Columns accumulate
+    into per-field lists (pd.DataFrame(dict-of-lists) avoids the
+    row-tuple zip the list-of-tuples constructor pays)."""
+    return [f for f in field_names if f not in _INT_FIELDS
+            and f not in ("epoch_us", "sdata", "sdata_json", "parsed_json")]
+
+
 def make_parse_udf(options: ParserOptions, emit_parsed_json: bool = False):
     """Build the Arrow-batched parse UDF (options captured by closure;
     must have a pinned now_epoch for deterministic retries)."""
@@ -967,16 +976,7 @@ def make_parse_udf(options: ParserOptions, emit_parsed_json: bool = False):
             "(wall-clock reads inside tasks break retry determinism)"
         )
 
-    # Hot-path field layout: the handful of special fields get explicit
-    # slots; everything else is a plain dict get.  Columns accumulate
-    # into per-field lists (pd.DataFrame(dict-of-lists) avoids the
-    # row-tuple zip the list-of-tuples constructor pays).
-    plain_fields = [
-        f
-        for f in FIELD_NAMES
-        if f not in _INT_FIELDS
-        and f not in ("epoch_us", "sdata", "sdata_json", "parsed_json")
-    ]
+    plain_fields = _plain_fields(FIELD_NAMES)
     fast_re = None if emit_parsed_json else _fast_regex(options)
 
     @pandas_udf(SYSLOG_SCHEMA)
@@ -988,25 +988,26 @@ def make_parse_udf(options: ParserOptions, emit_parsed_json: bool = False):
     return parse_udf
 
 
-def make_parse_tokens_udf(options: ParserOptions, emit_parsed_json: bool = False):
+def make_parse_tokens_udf(options: ParserOptions):
     """Fused detokenize+parse UDF: tokens array<int32> -> parsed struct
-    (with the raw line as message_raw/raw inside the struct).  One
-    Python/Arrow boundary instead of two back-to-back ArrowEvalPython
-    nodes — at 10^12 rows the second crossing is pure waste."""
+    with the decoded line as `raw`.  One Python/Arrow boundary instead
+    of two back-to-back ArrowEvalPython nodes — at 10^12 rows the second
+    crossing is pure waste.  The struct has no `message_raw`: it would
+    cross the boundary as a second copy of `raw` (or a null under
+    prune_raw)."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     if options.now_epoch is None:
         raise ValueError("options.now_epoch must be pinned (see make_parse_udf)")
 
-    schema = StructType(SYSLOG_SCHEMA.fields + [StructField("raw", StringType())])
-    plain_fields = [
-        f
-        for f in FIELD_NAMES
-        if f not in _INT_FIELDS
-        and f not in ("epoch_us", "sdata", "sdata_json", "parsed_json")
-    ]
-    fast_re = None if emit_parsed_json else _fast_regex(options)
+    field_names = [f for f in FIELD_NAMES if f != "message_raw"]
+    schema = StructType(
+        [f for f in SYSLOG_SCHEMA.fields if f.name != "message_raw"]
+        + [StructField("raw", StringType())]
+    )
+    plain_fields = _plain_fields(field_names)
+    fast_re = _fast_regex(options)
 
     @pandas_udf(schema)
     def parse_tokens_udf(tokens: pd.Series) -> pd.DataFrame:
@@ -1021,8 +1022,8 @@ def make_parse_tokens_udf(options: ParserOptions, emit_parsed_json: bool = False
             index=tokens.index,
             dtype=object,
         )
-        out = _parse_batch(parser, raw, options, FIELD_NAMES, plain_fields,
-                           emit_parsed_json, fast_re)
+        out = _parse_batch(parser, raw, options, field_names, plain_fields,
+                           False, fast_re)
         out["raw"] = raw
         return out
 
@@ -1033,13 +1034,12 @@ def parse_syslog_tokens(
     df: DataFrame,
     tokens_col: str = "tokens",
     options: ParserOptions | None = None,
-    emit_parsed_json: bool = False,
     struct_col: str = "syslog",
 ) -> DataFrame:
     """Fused scan-side operator: detokenize+parse in one Arrow crossing,
     flattened, with the JVM-derived ts column (like parse_syslog)."""
     options = options or ParserOptions()
-    udf = make_parse_tokens_udf(options, emit_parsed_json)
+    udf = make_parse_tokens_udf(options)
     out = df.withColumn(struct_col, udf(F.col(tokens_col)))
     out = out.select(*df.columns, f"{struct_col}.*")
     return out.withColumn("ts", F.timestamp_micros(F.col("epoch_us")))

@@ -53,12 +53,11 @@ def save_manifest(out_dir: str, manifest: dict) -> None:
     os.replace(tmp, _manifest_path(out_dir))
 
 
-def transform(tokens_df: DataFrame, options: ParserOptions,
-              parse_partitions: int | None = None,
-              emit_parsed_json: bool = False) -> DataFrame:
+def transform(tokens_df: DataFrame, options: ParserOptions) -> DataFrame:
     """The logical plan shared by batch pipeline, bench, and tests:
-    (detokenize+parse fused into one Arrow crossing) → enrich.
-    Pure — no writes."""
+    (detokenize+parse fused into one Arrow crossing) → enrich, without
+    the `tokens` input column (`raw` carries the line).  Writes no data,
+    but sets the two session settings below."""
     from .parser import parse_syslog_tokens
 
     # Callers persist the frame this returns (bench stage 1, run_pipeline
@@ -67,31 +66,20 @@ def transform(tokens_df: DataFrame, options: ParserOptions,
     # sdata_json, rendered datetimes) that barely compress — measured
     # 372 MB compressed vs 454 MB raw at bench scale (1.22x) while the
     # encode/decode cost 30-50% of the cache-build wall (2.2s -> 3.2s
-    # steady-state build+count) plus decode on every downstream scan
-    # (guide §2.3: for high-entropy payloads compression is pure
-    # overhead — measure both; we did).  That ratio is a property of
-    # the enriched schema, not of the scale factor, so the default
-    # holds at 10^12 rows; override via PSL_CACHE_COMPRESS=true where
-    # cache memory is the binding constraint.
-    tokens_df.sparkSession.conf.set(
-        "spark.sql.inMemoryColumnarStorage.compressed",
-        os.environ.get("PSL_CACHE_COMPRESS", "false"))
+    # steady-state build+count) plus decode on every downstream scan.
+    # That ratio is a property of the enriched schema, not of the scale
+    # factor, so it holds at 10^12 rows.
+    conf = tokens_df.sparkSession.conf
+    conf.set("spark.sql.inMemoryColumnarStorage.compressed", "false")
     # First-level vectorized aggregate hash map (off by default in
     # Spark): every downstream aggregate of the enriched frame
-    # (hourly/sink counts, salted host/program counts) measured a
-    # consistent 5-10% faster with it across interleaved A/B reps
-    # (hourly 2.30->2.14s, salted 1.89->1.55s, 600k rows).  Scale-safe:
-    # it only changes the in-task partial-agg data structure, not the
-    # plan; override via PSL_AGG_VECTORIZED_MAP=false.
-    tokens_df.sparkSession.conf.set(
-        "spark.sql.codegen.aggregate.map.vectorized.enable",
-        os.environ.get("PSL_AGG_VECTORIZED_MAP", "true"))
-    df = tokens_df
-    if parse_partitions:
-        df = df.repartition(parse_partitions)
-    parsed = parse_syslog_tokens(df, "tokens", options,
-                                 emit_parsed_json=emit_parsed_json)
-    return enrich(parsed)
+    # (hourly/sink/host counts) measured a consistent 5-10% faster with
+    # it across interleaved A/B reps (hourly 2.30->2.14s, 600k rows).
+    # Scale-safe: it only changes the in-task partial-agg data
+    # structure, not the plan.
+    conf.set("spark.sql.codegen.aggregate.map.vectorized.enable", "true")
+    parsed = parse_syslog_tokens(tokens_df, "tokens", options)
+    return enrich(parsed.drop("tokens"))
 
 
 def run_pipeline(
@@ -113,7 +101,7 @@ def run_pipeline(
             continue
         t0 = time.time()
         part = tokens_df.filter(bucket_col == b)
-        enriched = transform(part, options, parse_partitions=parallelism * 2)
+        enriched = transform(part.repartition(parallelism * 2), options).persist()
 
         m: dict = {"bucket": b}
         if verify_roundtrip:
@@ -122,9 +110,6 @@ def run_pipeline(
                 ~(F.col("tokens") == F.col("tokens_rt"))
             ).count()
 
-        # tokens/message_raw are dead weight downstream (raw carries the
-        # line for routed-row checks); dropping them halves cache bytes
-        enriched = enriched.drop("tokens", "message_raw").persist()
         m["rows_in"] = enriched.count()
         m["parse_no_ts"] = enriched.filter(F.col("ts").isNull()).count()
         route_by_facility_severity(

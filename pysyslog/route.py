@@ -37,7 +37,7 @@ MIN_SALT_ROWS = 50_000
 # time win.  Cardinality is a property of the fields, not of the scale
 # factor, so the split holds at 10^12 rows.
 HIGH_CARDINALITY_COLS = (
-    "doc_id", "raw", "message", "message_raw", "content", "datetime_raw",
+    "doc_id", "raw", "message", "content", "datetime_raw",
     "epoch", "epoch_us", "ts", "sdata_json", "time", "datetime_utc",
     "datetime_local", "datetime_str", "program_pid",
 )

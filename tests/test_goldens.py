@@ -15,11 +15,18 @@ from pysyslog import ParserOptions, SyslogParser, options_from_perl
 from pysyslog.goldens import (
     GOLDEN_NOW_EPOCH,
     GOLDEN_TZ,
+    REFERENCE_DATA_DIR,
     diff_records,
     load_fixtures,
 )
 
 FIXTURES = load_fixtures()
+if not FIXTURES:
+    pytest.skip(
+        f"golden anchor missing: no *.yaml fixtures under REFERENCE_DATA_DIR="
+        f"{REFERENCE_DATA_DIR} (set PSL_REFERENCE_DATA)",
+        allow_module_level=True,
+    )
 
 BASE = ParserOptions(now_epoch=GOLDEN_NOW_EPOCH, default_tz=GOLDEN_TZ)
 

@@ -9,11 +9,19 @@ column spot checks and plan shape.
 from __future__ import annotations
 
 import json
+import warnings
 
+import numpy as np
 import pytest
 
 from pysyslog import ParserOptions, SyslogParser, options_from_perl
-from pysyslog.goldens import GOLDEN_NOW_EPOCH, canonical_json, load_fixtures
+from pysyslog.gen import synth_lines
+from pysyslog.goldens import (
+    GOLDEN_NOW_EPOCH,
+    REFERENCE_DATA_DIR,
+    canonical_json,
+    load_fixtures,
+)
 from pysyslog.parser import parse_syslog
 
 FIXTURES = load_fixtures()
@@ -23,15 +31,22 @@ BASE = ParserOptions(now_epoch=GOLDEN_NOW_EPOCH, default_tz="UTC")
 def test_parse_corpus_through_spark(spark):
     # All-SDATA-on options cover every fixture's features in one pass
     opts = BASE.with_(auto_detect_json=True, auto_detect_key_values=True)
-    rows = [(fid, FIXTURES[fid]["string"]) for fid in sorted(FIXTURES)]
-    df = spark.createDataFrame(rows, "fixture_id string, raw string")
+    corpus = {fid: fx["string"] for fid, fx in FIXTURES.items()}
+    if not corpus:  # never check zero rows: fall back to generated lines
+        warnings.warn(f"golden anchor missing: no *.yaml fixtures under "
+                      f"REFERENCE_DATA_DIR={REFERENCE_DATA_DIR}; checking "
+                      "Spark against the core parser on generated lines")
+        lines, _ = synth_lines(np.arange(200))
+        corpus = {f"gen{i:03d}": s for i, s in enumerate(lines)}
+    df = spark.createDataFrame(sorted(corpus.items()),
+                               "fixture_id string, raw string")
     out = parse_syslog(df, "raw", opts, emit_parsed_json=True).collect()
 
     core = SyslogParser(opts)
     by_id = {r["fixture_id"]: r for r in out}
-    assert len(by_id) == len(FIXTURES)
-    for fid, fx in FIXTURES.items():
-        want = canonical_json(core.parse(fx["string"]))
+    assert by_id and len(by_id) == len(corpus)
+    for fid, line in corpus.items():
+        want = canonical_json(core.parse(line))
         got = by_id[fid]["parsed_json"]
         assert got == want, f"{fid}: spark vs core mismatch"
 

@@ -143,6 +143,9 @@ def test_pipeline_counts_session_tz_independent(spark, corpus):
 
 def test_salted_counts_equal_plain_groupby(spark, corpus):
     df = transform(corpus, OPTS)
+    # the frame callers persist: the line once, as raw
+    assert "raw" in df.columns
+    assert not {"tokens", "message_raw"} & set(df.columns)
     plain = {
         r["host"]: r["cnt"]
         for r in df.groupBy("host").count().withColumnRenamed("count", "cnt").collect()

@@ -58,6 +58,20 @@ def test_aggregate_is_partial_final(spark):
     assert plan.count("HashAggregate") >= 2, plan
 
 
+def test_host_counts_one_shuffle_after_partial_count(spark):
+    """Host counts need no salt: the count is combined map-side
+    (partial_count) so a hot host reaches the one shuffle as at most
+    one row per map partition."""
+    from pysyslog.aggregate import salted_counts
+
+    df = spark.createDataFrame([("May 19 22:03:29 h p: x",)], "raw string")
+    e = enrich(parse_syslog(df, "raw", OPTS))
+    plan = _plan(salted_counts(e, "host"))
+    shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
+    assert shuffles == 1, plan
+    assert "partial_count" in plan, plan
+
+
 def test_minhash_signatures_shuffle_free(spark):
     """MinHash mins are per-document (array_min over the shingle array):
     the plan must be a pure narrow map — no Exchange anywhere.  (The
