@@ -632,9 +632,9 @@ def config_matrix(n: int = 20000) -> dict[str, float]:
     from pysyslog.options import ParserOptions
     from pysyslog.parser import (
         FIELD_NAMES,
-        _INT_FIELDS,
         _fast_regex,
         _parse_batch,
+        _plain_fields,
     )
     from pysyslog.parser_core import SyslogParser
 
@@ -652,11 +652,7 @@ def config_matrix(n: int = 20000) -> dict[str, float]:
     }
     lines, _ = synth_lines(np.arange(n))
     raw = pd.Series(lines, dtype=object)
-    plain = [
-        f for f in FIELD_NAMES
-        if f not in _INT_FIELDS
-        and f not in ("epoch_us", "sdata", "sdata_json", "parsed_json")
-    ]
+    plain = _plain_fields(FIELD_NAMES)
     out = {}
     for name, opts in presets.items():
         rx = _fast_regex(opts)
@@ -691,9 +687,9 @@ def date_cohort_matrix(n: int = 20000) -> dict[str, float]:
     from pysyslog.options import ParserOptions
     from pysyslog.parser import (
         FIELD_NAMES,
-        _INT_FIELDS,
         _fast_regex,
         _parse_batch,
+        _plain_fields,
     )
     from pysyslog.parser_core import SyslogParser
 
@@ -709,11 +705,7 @@ def date_cohort_matrix(n: int = 20000) -> dict[str, float]:
                    if s.startswith("bsd_")][:n],
         "mixed": lines[:n],
     }
-    plain = [
-        f for f in FIELD_NAMES
-        if f not in _INT_FIELDS
-        and f not in ("epoch_us", "sdata", "sdata_json", "parsed_json")
-    ]
+    plain = _plain_fields(FIELD_NAMES)
     rx = _fast_regex(opts)
     out = {}
     for name, cohort_lines in cohorts.items():

@@ -36,7 +36,9 @@ from pyspark.sql.types import (
 
 from .goldens import canon, canonical_json
 from .options import ParserOptions
-from .parser_core import SyslogParser
+from .parser_core import _DAYS_IN_MONTH, SyslogParser
+from .tables import MONTH_NUM
+from .tokens import decode_tokens
 
 _STR_FIELDS_1 = (
     "message_raw priority facility datetime_raw epoch datetime_utc "
@@ -130,24 +132,6 @@ def _epoch_us(epoch_str) -> int | None:
         return None
 
 
-def _field_value(msg: dict, f: str, emit_parsed_json: bool):
-    if f in _INT_FIELDS:
-        v = msg.get(f)
-        return v if isinstance(v, int) and not isinstance(v, bool) else None
-    if f == "epoch_us":
-        return _epoch_us(msg.get("epoch"))
-    if f == "sdata":
-        sdata = msg.get("SDATA")
-        return _flatten_sdata(sdata) if isinstance(sdata, dict) else None
-    if f == "sdata_json":
-        sdata = msg.get("SDATA")
-        return _sdata_ser(sdata) if sdata is not None else None
-    if f == "parsed_json":
-        return canonical_json(msg) if emit_parsed_json else None
-    v = msg.get(f)
-    return str(v) if v is not None and not isinstance(v, str) else v
-
-
 # Per-worker parser cache: one compiled SyslogParser per options tuple,
 # reused across all Arrow batches (⇔ the reference's precompiled %RE).
 _PARSER_CACHE: dict = {}
@@ -173,11 +157,6 @@ _PARSER_CACHE: dict = {}
 # program names that the reference's severity-word filter would drop
 # (Line.pm:884: tokens that are priority names are removed from the tag)
 from .tables import INT_PRIORITY as _PRIO_WORDS
-
-# below this fast-cohort fraction a batch takes the state machine
-# outright — the vectorized assembly doesn't amortize on thin cohorts
-# (tests patch this to 0 to force the fast path under adversarial input)
-_FAST_MIN_FRAC = 0.15
 
 
 def _fast_regex(options: ParserOptions):
@@ -207,7 +186,10 @@ def _fast_regex(options: ParserOptions):
     # dt: plain BSD (optional leading year — the (?=[A-Z]) lookahead
     # binds it to the BSD branch only, matching RE_DATE_BSD's year
     # prefix; optional fractional seconds) or ISO8601 — same shapes the
-    # slow path's RE_DATE_BSD / RE_DATE_ISO would consume.
+    # slow path's RE_DATE_BSD / RE_DATE_ISO would consume.  ISO offset
+    # minutes of 60+ ("-05:90") are left to `irest`: the state machine
+    # carries them into the hour ("-0630"), so those rows take the
+    # per-row datetime fallback.
     # preamble: optional RFC5424 version digit(s) after the PRI —
     # RE_PREAMBLE's (\d{0,2}(?=\s))?\s* — consumed only when followed
     # by whitespace, exactly like the slow path.
@@ -241,7 +223,7 @@ def _fast_regex(options: ParserOptions):
         r"|(?P<iy>\d{4})-(?P<imo>\d{2})-(?P<iday>\d{2})[T ]"
         r"(?P<ih>\d{2}):(?P<imi>\d{2}):(?P<isec>\d{2})"
         r"(?:\.(?P<ifr>\d{3}|\d{6}(?!\d))(?!\d))?"
-        r"(?P<ioff>Z|[+-]\d{2}:?\d{2})?(?P<irest>\S*))"
+        r"(?P<ioff>Z|[+-]\d{2}:?[0-5]\d)?(?P<irest>\S*))"
         r"\s(?:(?P<host>\d{1,3}(?:\.\d{1,3}){3}"
         r"|[A-Za-z][A-Za-z0-9_-]*(?:\.[A-Za-z][A-Za-z0-9_-]*)*)\s|"
     )
@@ -314,12 +296,16 @@ def _fast_regex(options: ParserOptions):
     #   would otherwise split at the first colon or at the RIGHTMOST
     #   " - " (Line.pm:878) — the two lookaheads kick those to the
     #   state machine.
+    # - pid: no whitespace at all.  The state machine rebuilds the tag
+    #   from its whitespace-split words (minus priority names), so a pid
+    #   holding a tab, a run of spaces or a word like "err" comes out
+    #   changed; those rows go to it.
     return _re.compile(
         prefix + r"(?=/[^\s:]*+:))" + relay +
         r"(?:(?:(?P<cseq>\d{0,10}): (?:(?P<cflag>[.*])?"
         r"(?P<cdt>[A-Z][a-z]{2}\s+\d{1,2}\s+\d{2}:\d{2}:\d{2}): )?)?"
         r"(?P<praw>(?P<prog>/[A-Za-z0-9._/-]+|%?[A-Za-z][A-Za-z0-9._/-]+)"
-        r"(?:\[(?P<pid>[^\]:()]+)\])?)"
+        r"(?:\[(?P<pid>[^\]:()\s]+)\])?)"
         r"(?::\s++|(?P<hsep>[ \t]-)[ \t]++(?=[^:\n]*+$)(?![^\n]*[ \t]-[ \t]))"
         r"|\[(?P<nhost>[^\s:\]\[]+) (?P<nprog>[^\s:\]\[]+)"
         r":(?P<nlev>[^\s:\]\[]+)\]: (?![ :]))"
@@ -352,18 +338,12 @@ class _Groups:
         return [t[i] for t in self.tups]
 
 
-_DIM_VEC = None
+# single source of truth: the state machine's month table
+_DIM_VEC = np.array(_DAYS_IN_MONTH)
+_MONTH_1BASED = {k: v + 1 for k, v in MONTH_NUM.items()}
 
 
 def _days_in_month_vec(y, mo):
-    import numpy as np
-
-    from .parser_core import _DAYS_IN_MONTH
-
-    global _DIM_VEC
-    if _DIM_VEC is None:
-        # single source of truth: the state machine's month table
-        _DIM_VEC = np.array(_DAYS_IN_MONTH)
     dim = _DIM_VEC[np.clip(mo, 1, 12) - 1].copy()
     leap = (y % 4 == 0) & ((y % 100 != 0) | (y % 400 == 0))
     dim[(mo == 2) & leap] = 29
@@ -372,26 +352,12 @@ def _days_in_month_vec(y, mo):
 
 def _days_from_civil_vec(y, mo, d):
     """Vector twin of parser_core._days_from_civil (y may be scalar)."""
-    import numpy as np
-
     yy = y - (mo <= 2)
     era = yy // 400
     yoe = yy - era * 400
     doy = (153 * (mo + np.where(mo > 2, -3, 9)) + 2) // 5 + d - 1
     doe = yoe * 365 + yoe // 4 - yoe // 100 + doy
     return era * 146097 + doe - 719468
-
-
-_MONTH_1BASED = None
-
-
-def _month_map():
-    global _MONTH_1BASED
-    if _MONTH_1BASED is None:
-        from .tables import MONTH_NUM
-
-        _MONTH_1BASED = {k: v + 1 for k, v in MONTH_NUM.items()}
-    return _MONTH_1BASED
 
 
 def _bsd_dt_tuples(parser, comps, yrs):
@@ -407,13 +373,10 @@ def _bsd_dt_tuples(parser, comps, yrs):
     ambiguity across the candidate years), fractions whose re-render
     isn't identity — fall back to the per-row memoized path, so output
     is identical either way."""
-    import numpy as np
-
     mon_l, day_l, h_l, mi_l, s_l, fr_l, dts = comps
     n = len(dts)
     out = [None] * n
-    mon_map = _month_map()
-    mo_num = [mon_map.get(m) if m is not None else None for m in mon_l]
+    mo_num = [_MONTH_1BASED.get(m) if m is not None else None for m in mon_l]
     ok = [
         mn is not None and not (f is not None and f.endswith("000"))
         for mn, f in zip(mo_num, fr_l)
@@ -461,28 +424,35 @@ def _bsd_dt_tuples(parser, comps, yrs):
 
 
 def _dt_fallback(parser, dts, yrs, out):
-    """Per-row memoized derivation for rows the vector path skipped
-    (identical output by construction).  Year-prefixed rows
-    reconstruct the ORIGINAL "yyyy Mmm d ..." order for RE_DATE_BSD
+    """Per-row derivation through the state machine's `dt_fields` for
+    every row still None in `out` (identical output by construction),
+    resolved once per distinct timestamp in the batch.  Year-prefixed
+    rows reconstruct the ORIGINAL "yyyy Mmm d ..." order for RE_DATE_BSD
     (the state machine's datetime_raw puts the year at the END, which
     RE_DATE_BSD would not re-match)."""
     from .parser_core import RE_DATE_BSD
 
-    for i in range(len(dts)):
-        if out[i] is None:
-            yr = yrs[i]
-            if yr is not None:
-                src = f"{yr} {dts[i]}"
+    table: dict = {}
+    for i, t in enumerate(out):
+        if t is not None:
+            continue
+        s, yr = dts[i], yrs[i]
+        key = s if yr is None else f"{s} {yr}"
+        t = table.get(key)
+        if t is None:
+            if yr is None:
+                d = parser.dt_fields(s)
+            else:
+                src = f"{yr} {s}"
                 m = RE_DATE_BSD.match(src)
                 groups = m.groups() if m and m.end() == len(src) else None
-                dd = parser.dt_fields(f"{dts[i]} {yr}", groups)
-            else:
-                dd = parser.dt_fields(dts[i])
-            out[i] = (
-                dd["epoch"], dd["datetime_utc"], dd["datetime_local"],
-                dd["datetime_str"], dd["tz"], dd["date"], dd["time"],
-                _epoch_us(dd["epoch"]),
+                d = parser.dt_fields(key, groups)
+            t = table[key] = (
+                d["epoch"], d["datetime_utc"], d["datetime_local"],
+                d["datetime_str"], d["tz"], d["date"], d["time"],
+                _epoch_us(d["epoch"]),
             )
+        out[i] = t
 
 
 def _iso_dt_tuples(parser, comps, yrs):
@@ -498,8 +468,6 @@ def _iso_dt_tuples(parser, comps, yrs):
     integer arrays and np.datetime_as_string emits the
     YYYY-MM-DDTHH:MM:SS prefix in C; everything else is plain-list
     assembly (faster than np.char fixed-width string ops)."""
-    import numpy as np
-
     y_l, mo_l, d_l, h_l, mi_l, s_l, fr_l, off_l, rest_l, dts = comps
     n = len(dts)
     out = [None] * n
@@ -567,14 +535,13 @@ def _derive_dt_columns(parser, ext, dt_list, yr_list):
     column lists (epoch, the three rendered strings, tz, date, time,
     epoch_us) for the batch.  Skipped entirely when DateParsing=0."""
     n = len(dt_list)
-    bsd_mask = [s[0].isalpha() for s in dt_list]
-    vec_ok = parser.local_offset_min == 0 and parser._tm_render is None
-    if vec_ok:
+    tups: list = [None] * n
+    if parser.local_offset_min == 0 and parser._tm_render is None:
         # both cohorts derive vectorized (numpy civil-date arithmetic)
         # straight from the master regex's component groups: ISO
         # strings are near-unique (micros), and BSD strings at second
         # granularity defeat the memo on wide-time-range corpora
-        tups: list = [None] * n
+        bsd_mask = [s[0].isalpha() for s in dt_list]
 
         def _sel(names, pos):
             collists = [ext.col(c) for c in names]
@@ -599,28 +566,9 @@ def _derive_dt_columns(parser, ext, dt_list, yr_list):
             for j, i in enumerate(bsd_pos):
                 tups[i] = bsd_tups[j]
     else:
-        # one datetime resolution per unique raw timestamp (parser memo)
-        from .parser_core import RE_DATE_BSD
-
-        table: dict = {}
-        tups = []
-        for s, yr in zip(dt_list, yr_list):
-            key = s if yr is None else f"{s} {yr}"
-            t = table.get(key)
-            if t is None:
-                if yr is None:
-                    d = parser.dt_fields(s)
-                else:
-                    src = f"{yr} {s}"
-                    m = RE_DATE_BSD.match(src)
-                    groups = m.groups() if m and m.end() == len(src) else None
-                    d = parser.dt_fields(key, groups)
-                t = table[key] = (
-                    d["epoch"], d["datetime_utc"], d["datetime_local"],
-                    d["datetime_str"], d["tz"], d["date"], d["time"],
-                    _epoch_us(d["epoch"]),
-                )
-            tups.append(t)
+        # a local zone or a custom time_format: the state machine's
+        # derivation, once per distinct timestamp
+        _dt_fallback(parser, dt_list, yr_list, tups)
     return (list(t) for t in zip(*tups))
 
 
@@ -826,8 +774,7 @@ def _slow_cols(parser, raw_list, field_names, plain_fields,
     parse = parser.parse
     cols: dict[str, list] = {f: [] for f in field_names}
     plain_appends = [(f, cols[f].append) for f in plain_fields]
-    # the special fields are fixed; inline their common cases instead of
-    # dispatching through _field_value (8 Python calls per row)
+    # the special fields are fixed: explicit slots, no per-field dispatch
     int_appends = [(f, cols[f].append) for f in
                    ("preamble", "version", "priority_int", "facility_int")]
     a_epoch_us = cols["epoch_us"].append
@@ -850,8 +797,8 @@ def _slow_cols(parser, raw_list, field_names, plain_fields,
             a_sdata(None)
             a_sdata_json(None)
         else:
-            a_sdata(_field_value(msg, "sdata", False))
-            a_sdata_json(_field_value(msg, "sdata_json", False))
+            a_sdata(_flatten_sdata(sdata) if isinstance(sdata, dict) else None)
+            a_sdata_json(_sdata_ser(sdata))
         a_parsed(canonical_json(msg) if emit_parsed_json else None)
     return cols
 
@@ -886,8 +833,6 @@ def _parse_batch(parser, raw: pd.Series, options, field_names, plain_fields,
                  emit_parsed_json, fast_re) -> pd.DataFrame:
     """Split a batch into the vectorized clean-line cohort and the
     state-machine remainder; outputs are row-identical either way."""
-    import numpy as np
-
     if fast_re is None or emit_parsed_json or len(raw) == 0:
         return _slow_frame(parser, raw, field_names, plain_fields,
                            emit_parsed_json)
@@ -921,13 +866,11 @@ def _parse_batch(parser, raw: pd.Series, options, field_names, plain_fields,
         # alone is cohort membership (the severity-word filter only
         # exists for the program-name split)
         mask = np.fromiter((t is not None for t in tups), bool, n)
-    frac = mask.mean()
-    if not mask.any() or frac < _FAST_MIN_FRAC:
-        # cohort too thin to amortize the vectorized assembly
+    if not mask.any():
         return _slow_frame(parser, raw, field_names, plain_fields,
                            emit_parsed_json)
     idx = {name: num - 1 for name, num in gi.items()}
-    if frac == 1.0:
+    if mask.all():
         cols = _fast_cols(parser, raw_list, _Groups(tups, idx), options,
                           field_names)
         return _typed_frame(cols, raw.index, field_names)
@@ -995,7 +938,6 @@ def make_parse_tokens_udf(options: ParserOptions):
     crossing is pure waste.  The struct has no `message_raw`: it would
     cross the boundary as a second copy of `raw` (or a null under
     prune_raw)."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     if options.now_epoch is None:
@@ -1012,16 +954,7 @@ def make_parse_tokens_udf(options: ParserOptions):
     @pandas_udf(schema)
     def parse_tokens_udf(tokens: pd.Series) -> pd.DataFrame:
         parser = _get_parser(options)
-        raw = pd.Series(
-            [
-                None
-                if arr is None
-                else np.asarray(arr, dtype=np.uint8).tobytes().decode("utf-8", "strict")
-                for arr in tokens
-            ],
-            index=tokens.index,
-            dtype=object,
-        )
+        raw = decode_tokens(tokens)
         out = _parse_batch(parser, raw, options, field_names, plain_fields,
                            False, fast_re)
         out["raw"] = raw

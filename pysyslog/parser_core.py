@@ -39,7 +39,7 @@ from __future__ import annotations
 
 import json
 import re
-from datetime import datetime, timedelta, timezone
+from datetime import datetime, timezone
 
 from .options import ParserOptions
 from .tables import (
@@ -193,7 +193,6 @@ RE_COLON_SPACE = re.compile(r"[: ]+")
 RE_LEAD_COLON_WS = re.compile(r"^[ :]+")
 RE_UNQUOTE = re.compile(r'(?:^")|(?:"$)')
 RE_UTC_SUFFIX = re.compile(r"\+00:?00$")
-RE_UTC_ANY = re.compile(r"\+00:?00")
 RE_LSTRIP = re.compile(r"^\s+")
 RE_RESPACE = re.compile(r":\s*")
 RE_SPLIT_DT = re.compile(r"[ T]")
@@ -396,7 +395,6 @@ def _compile_tm_format(fmt: str):
 
 _DEFAULT_TIME_FORMAT = "%FT%T%f%z"
 
-_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 _DAYS_IN_MONTH = (31, 28, 31, 30, 31, 30, 31, 31, 30, 31, 30, 31)
 
 

@@ -30,7 +30,7 @@ from .enrich import enrich
 from .options import ParserOptions
 from .parser import parse_syslog
 from .route import route_by_facility_severity
-from .tokens import detokenize, retokenize
+from .tokens import detokenize, roundtrip_violations
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -63,18 +63,20 @@ def transform(tokens_df: DataFrame, options: ParserOptions) -> DataFrame:
     # Callers persist the frame this returns (bench stage 1, run_pipeline
     # per bucket).  Columnar-cache compression is a bad trade for it:
     # the wide columns are near-unique strings (raw, message, content,
-    # sdata_json, rendered datetimes) that barely compress — measured
-    # 372 MB compressed vs 454 MB raw at bench scale (1.22x) while the
-    # encode/decode cost 30-50% of the cache-build wall (2.2s -> 3.2s
-    # steady-state build+count) plus decode on every downstream scan.
-    # That ratio is a property of the enriched schema, not of the scale
-    # factor, so it holds at 10^12 rows.
+    # sdata_json, rendered datetimes) that barely compress, while the
+    # encode/decode costs every build and every downstream scan.
+    # Measured on 4 vCPU at 40k lines, both settings below against
+    # neither (8 alternating reps after a warm-up): the cache is 31.4 MB
+    # against 25.1 MB compressed (1.25x), the build 1.36 s against
+    # 1.62 s, and the whole pass was faster in 7 of 8 pairs.  That ratio
+    # is a property of the enriched schema, not of the scale factor, so
+    # it holds at 10^12 rows.
     conf = tokens_df.sparkSession.conf
     conf.set("spark.sql.inMemoryColumnarStorage.compressed", "false")
     # First-level vectorized aggregate hash map (off by default in
-    # Spark): every downstream aggregate of the enriched frame
-    # (hourly/sink/host counts) measured a consistent 5-10% faster with
-    # it across interleaved A/B reps (hourly 2.30->2.14s, 600k rows).
+    # Spark): the downstream aggregates of the enriched frame
+    # (hourly/sink/host counts) took 0.63 s against 0.89 s in the same
+    # runs (both settings together: the cache scan no longer decodes).
     # Scale-safe: it only changes the in-task partial-agg data
     # structure, not the plan.
     conf.set("spark.sql.codegen.aggregate.map.vectorized.enable", "true")
@@ -105,13 +107,12 @@ def run_pipeline(
 
         m: dict = {"bucket": b}
         if verify_roundtrip:
-            rt = retokenize(detokenize(part), raw_col="raw", out_col="tokens_rt")
-            m["roundtrip_violations"] = rt.filter(
-                ~(F.col("tokens") == F.col("tokens_rt"))
-            ).count()
+            m["roundtrip_violations"] = roundtrip_violations(detokenize(part)).count()
 
-        m["rows_in"] = enriched.count()
-        m["parse_no_ts"] = enriched.filter(F.col("ts").isNull()).count()
+        # one job for both manifest counts
+        m["rows_in"], m["parse_no_ts"] = enriched.agg(
+            F.count(F.lit(1)), F.count_if(F.col("ts").isNull())
+        ).first()
         route_by_facility_severity(
             enriched, os.path.join(out_dir, f"bucket={b}"), mode="overwrite",
             rows_hint=m["rows_in"],

@@ -62,7 +62,7 @@ def test_parse_multiline_records(spark):
 
 def test_streaming_reassembly(spark, tmp_path):
     import json
-    import os
+    import time
 
     from pysyslog.streaming import reassemble_stream
 
@@ -85,7 +85,15 @@ def test_streaming_reassembly(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # the availableNow query does not stop by itself while the buffered
+    # third record's timer is armed: wait for the two completed records
+    deadline = time.monotonic() + 120
+    try:
+        while (q.isActive and time.monotonic() < deadline
+               and spark.table("reasm").count() < 2):
+            time.sleep(0.5)
+    finally:
+        q.stop()
     rows = {r["record_no"]: r["raw"] for r in spark.sql("select * from reasm").collect()}
     # the last record stays buffered until timeout — first two flush
     assert rows[1] == "\n".join(LINES[0:3])

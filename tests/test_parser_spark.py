@@ -108,9 +108,9 @@ def test_fast_path_equals_slow_on_mixed_corpus():
     from pysyslog.options import ParserOptions
     from pysyslog.parser import (
         FIELD_NAMES,
-        _INT_FIELDS,
         _fast_regex,
         _parse_batch,
+        _plain_fields,
         _slow_frame,
     )
     from pysyslog.parser_core import SyslogParser
@@ -208,13 +208,18 @@ def test_fast_path_equals_slow_on_mixed_corpus():
         # later token, so RE_HOST succeeds and these must stay slow
         "Jun  1 12:00:00 /x[a b]: y",
         "Jun  1 12:00:00 /usr/bin/app[p q]: space pid path",
+        # the state machine rebuilds the tag from its whitespace-split
+        # words minus priority names: these pids must stay slow
+        "Jun  1 12:00:00 host sshd[101\t73]: hi",
+        "Jun  1 12:00:00 host sshd[101  73]: hi",
+        "Jun  1 12:00:00 host sshd[1 err 2]: hi",
+        "Jun  1 12:00:00 host sshd[1\xa02]: hi",
+        # offset minutes of 60+ carry into the hour in the state machine
+        "2024-06-01T12:00:00-05:90 host app: offset minutes 90",
+        "2024-06-01T12:00:00+01:60 host app: offset minutes 60",
         None,
     ]
-    plain = [
-        f for f in FIELD_NAMES
-        if f not in _INT_FIELDS
-        and f not in ("epoch_us", "sdata", "sdata_json", "parsed_json")
-    ]
+    plain = _plain_fields(FIELD_NAMES)
     option_sets = [
         ParserOptions(now_epoch=GEN_NOW_EPOCH),
         ParserOptions(now_epoch=GEN_NOW_EPOCH, auto_detect_json=True,
@@ -232,6 +237,10 @@ def test_fast_path_equals_slow_on_mixed_corpus():
         ParserOptions(now_epoch=GEN_NOW_EPOCH, date_parsing=False),
         ParserOptions(now_epoch=GEN_NOW_EPOCH, date_parsing=False,
                       extract_program=False),
+        # the per-timestamp datetime fallback (no vector derivation)
+        ParserOptions(now_epoch=GEN_NOW_EPOCH, default_tz="Europe/Warsaw"),
+        ParserOptions(now_epoch=GEN_NOW_EPOCH,
+                      time_format="%Y-%m-%d %H:%M:%S%z"),
     ]
     raw = pd.Series(lines, dtype=object)
     for opts in option_sets:

@@ -191,6 +191,23 @@ def test_routed_row_equality_and_resume(spark, corpus, tmp_path):
     assert load_manifest(out)["metrics"]["total_rows"] == N
 
 
+def test_manifest_counts_undated_rows(spark, tmp_path):
+    """rows_in and parse_no_ts: a line without a date parses with no
+    epoch, so its ts is null and it counts in parse_no_ts."""
+    lines = ["<13>host1 app: no date here", "no date at all",
+             "May 19 22:03:29 janus sshd[10173]: dated"]
+    p = SyslogParser(OPTS)
+    assert ["epoch" in p.parse(s) for s in lines] == [False, False, True]
+    toks = [list(s.encode("utf-8")) for s in lines]
+    df = spark.createDataFrame(
+        [(f"d{i}", t, len(t), "t") for i, t in enumerate(toks)],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    m = run_pipeline(spark, df, str(tmp_path / "sinks"), OPTS, n_buckets=1)
+    b = m["buckets"]["0"]
+    assert (b["rows_in"], b["parse_no_ts"], b["roundtrip_violations"]) == (3, 2, 0)
+
+
 def test_iceberg_probe_and_parquet_fallback(spark, tmp_path):
     """No iceberg runtime jar ships in this sandbox: the probe must say
     so (cached per JVM) and the sink writer must fall back to

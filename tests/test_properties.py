@@ -5,10 +5,18 @@ round-trip."""
 
 from __future__ import annotations
 
+import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from pysyslog import ParserOptions, SyslogParser
+from pysyslog.parser import (
+    FIELD_NAMES,
+    _fast_regex,
+    _parse_batch,
+    _plain_fields,
+    _slow_frame,
+)
 
 P = SyslogParser(
     ParserOptions(
@@ -67,6 +75,30 @@ def test_datetime_render_roundtrip(epoch, offset_min):
 
 # --- fast-path equivalence under adversarial lines -------------------------
 
+
+def _assert_fast_equals_slow(lines, opts):
+    """The vectorized cohort split of one batch is column-identical to
+    the pure state machine (None and NaN are both Arrow nulls; ints may
+    ride as floats)."""
+    raw = pd.Series(lines, dtype=object)
+    plain = _plain_fields(FIELD_NAMES)
+    got = _parse_batch(SyslogParser(opts), raw, opts, FIELD_NAMES, plain,
+                       False, _fast_regex(opts))
+    want = _slow_frame(SyslogParser(opts), raw, FIELD_NAMES, plain, False)
+
+    def _n(v):
+        if v is None or (isinstance(v, float) and v != v):
+            return None
+        if isinstance(v, float) and v == int(v):
+            return int(v)
+        return v
+
+    for f in FIELD_NAMES:
+        g = [_n(v) for v in got[f].tolist()]
+        w = [_n(v) for v in want[f].tolist()]
+        assert g == w, (opts, f, [(lines[i], a, b) for i, (a, b) in
+                                  enumerate(zip(g, w)) if a != b][:3])
+
 _MON = st.sampled_from(["Jan", "Feb", "Jun", "Dec", "Xyz", "jan"])
 _HOSTS = st.sampled_from(
     ["h1", "web.example.com", "10.1.2.3", "box1.2.3.4", "a-b_c", "x.9y", "h:1"]
@@ -122,56 +154,11 @@ def _syslog_like(draw):
 def test_fast_path_equivalence_property(lines):
     """For ANY batch, the vectorized cohort split must be column-
     identical to the pure state machine."""
-    import pandas as pd
-
-    from pysyslog.parser import (
-        FIELD_NAMES,
-        _INT_FIELDS,
-        _fast_regex,
-        _parse_batch,
-        _slow_frame,
-    )
-    from pysyslog.parser_core import SyslogParser as SP
-
-    import pysyslog.parser as parser_mod
-
-    plain = [
-        f for f in FIELD_NAMES
-        if f not in _INT_FIELDS
-        and f not in ("epoch_us", "sdata", "sdata_json", "parsed_json")
-    ]
-    option_sets = [
-        ParserOptions(now_epoch=1543622400.0, auto_detect_json=True,
-                      auto_detect_key_values=True),
-        # the no-program fast-regex variant has its own cohort guards
-        ParserOptions(now_epoch=1543622400.0, extract_program=False,
-                      auto_detect_json=True, auto_detect_key_values=True),
-    ]
-    raw = pd.Series(lines, dtype=object)
-
-    def _n(v):
-        if v is None or (isinstance(v, float) and v != v):
-            return None
-        if isinstance(v, float) and v == int(v):
-            return int(v)
-        return v
-
-    for opts in option_sets:
-        orig = parser_mod._FAST_MIN_FRAC
-        parser_mod._FAST_MIN_FRAC = 0.0  # always engage the fast path
-        try:
-            got = _parse_batch(SP(opts), raw, opts, FIELD_NAMES, plain,
-                               False, _fast_regex(opts))
-        finally:
-            parser_mod._FAST_MIN_FRAC = orig
-        want = _slow_frame(SP(opts), raw, FIELD_NAMES, plain, False)
-
-        for f in FIELD_NAMES:
-            g = [_n(v) for v in got[f].tolist()]
-            w = [_n(v) for v in want[f].tolist()]
-            assert g == w, (opts.extract_program, f,
-                            [(i, a, b) for i, (a, b)
-                             in enumerate(zip(g, w)) if a != b][:3])
+    base = ParserOptions(now_epoch=1543622400.0, auto_detect_json=True,
+                         auto_detect_key_values=True)
+    # the no-program fast-regex variant has its own cohort guards
+    for opts in (base, base.with_(extract_program=False)):
+        _assert_fast_equals_slow(lines, opts)
 
 
 # ---------------------------------------------------------------------------
@@ -179,8 +166,8 @@ def test_fast_path_equivalence_property(lines):
 # every fragment family the r4 master regex claims (PRI+version, BSD/ISO
 # datetimes, relay hops, Cisco infixes, all program separator forms,
 # NetApp brackets, strict/loose SDATA, JSON/KV tails) recombined at
-# random — with _FAST_MIN_FRAC forced to 0 so even a 1-row fast cohort
-# takes the vectorized assembly.  Equivalence is per-column exact.
+# random; even a 1-row fast cohort takes the vectorized assembly.
+# Equivalence is per-column exact.
 # ---------------------------------------------------------------------------
 
 _FRAG_PRI = ["", "<13>", "<191>", "<0>", "<13>1 ", "<34>0 ", "<5>00 ", "<13>12 "]
@@ -211,22 +198,15 @@ _FRAG_CONTENT = [
     "[plain] no kv", "x[attached=1]", "only - one", "trailing ",
 ]
 
-_EQ_OPTION_SETS = None
-
-
-def _eq_option_sets():
-    global _EQ_OPTION_SETS
-    if _EQ_OPTION_SETS is None:
-        base = ParserOptions(now_epoch=1543622400.0)
-        _EQ_OPTION_SETS = [
-            base,
-            base.with_(auto_detect_json=True, auto_detect_key_values=True),
-            base.with_(rfc5424_strict=True),
-            base.with_(extract_program=False, auto_detect_key_values=True),
-            base.with_(prune_raw=True, prune_empty=True),
-            base.with_(date_parsing=False),
-        ]
-    return _EQ_OPTION_SETS
+_BASE = ParserOptions(now_epoch=1543622400.0)
+_EQ_OPTION_SETS = [
+    _BASE,
+    _BASE.with_(auto_detect_json=True, auto_detect_key_values=True),
+    _BASE.with_(rfc5424_strict=True),
+    _BASE.with_(extract_program=False, auto_detect_key_values=True),
+    _BASE.with_(prune_raw=True, prune_empty=True),
+    _BASE.with_(date_parsing=False),
+]
 
 
 @given(
@@ -239,49 +219,10 @@ def _eq_option_sets():
         ),
         min_size=1, max_size=24,
     ),
-    st.integers(0, 5),
+    st.sampled_from(_EQ_OPTION_SETS),
 )
 @settings(max_examples=120, deadline=None)
-def test_fast_path_equals_slow_property(frags, opt_i):
-    import pandas as pd
-
-    import pysyslog.parser as parser_mod
-    from pysyslog.parser import (
-        FIELD_NAMES,
-        _INT_FIELDS,
-        _fast_regex,
-        _parse_batch,
-        _slow_frame,
-    )
-
-    opts = _eq_option_sets()[opt_i]
+def test_fast_path_equals_slow_property(frags, opts):
     lines = [pri + dt + " " + host + relay + cisco + prog + content
              for pri, dt, host, relay, cisco, prog, content in frags]
-    raw = pd.Series(lines, dtype=object)
-    plain = [
-        f for f in FIELD_NAMES
-        if f not in _INT_FIELDS
-        and f not in ("epoch_us", "sdata", "sdata_json", "parsed_json")
-    ]
-    fast_re = _fast_regex(opts)
-    old_frac = parser_mod._FAST_MIN_FRAC
-    parser_mod._FAST_MIN_FRAC = 0.0
-    try:
-        got = _parse_batch(SyslogParser(opts), raw, opts, FIELD_NAMES,
-                           plain, False, fast_re)
-    finally:
-        parser_mod._FAST_MIN_FRAC = old_frac
-    want = _slow_frame(SyslogParser(opts), raw, FIELD_NAMES, plain, False)
-
-    def _n(v):
-        if v is None or (isinstance(v, float) and v != v):
-            return "\0"
-        if isinstance(v, float) and v == int(v):
-            return int(v)
-        return v
-
-    for f in FIELD_NAMES:
-        g = [_n(v) for v in got[f].tolist()]
-        w = [_n(v) for v in want[f].tolist()]
-        assert g == w, (opt_i, f, [(lines[i], a, b) for i, (a, b) in
-                                   enumerate(zip(g, w)) if a != b][:2])
+    _assert_fast_equals_slow(lines, opts)

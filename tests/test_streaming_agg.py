@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import time
 
 
 def test_streaming_parse_and_watermarked_agg(spark, tmp_path):
@@ -130,9 +131,11 @@ def test_streaming_reassembly_real_stream(spark, tmp_path):
     """reassemble_stream through a REAL Structured Streaming query
     (file source → applyInPandasWithState → memory sink), not just the
     mock-GroupState transition tests below: completed records emit in
-    per-source order, and the availableNow termination batch fires the
-    processing-time timeout, flushing each source's pending buffer —
-    exactly the reference's final no-arg drain (Line.pm:1062-1065)."""
+    per-source order, and the processing-time timeout flushes each
+    source's pending buffer — exactly the reference's final no-arg
+    drain (Line.pm:1062-1065).  The availableNow query does not stop by
+    itself while timers are armed, so the test waits for the four
+    records and then stops it."""
     from pysyslog.streaming import reassemble_stream
 
     src = tmp_path / "rin"
@@ -150,9 +153,7 @@ def test_streaming_reassembly_real_stream(spark, tmp_path):
     stream = spark.readStream.schema(
         "source string, line_no long, line string"
     ).json(str(src))
-    # short timers: the availableNow query stays alive until every
-    # pending processing-time timeout fires (flush, then the re-armed
-    # empty-buffer removal), so second-scale timers bound the test
+    # short timers: the two pending buffers flush 2 s after the data
     rec = reassemble_stream(stream, timeout_ms=2_000)
     q = (
         rec.writeStream.format("memory")
@@ -162,8 +163,11 @@ def test_streaming_reassembly_real_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
+    deadline = time.monotonic() + 180
     try:
-        q.awaitTermination(180)
+        while (q.isActive and time.monotonic() < deadline
+               and spark.table("reasm_multi").count() < 4):
+            time.sleep(0.5)
     finally:
         q.stop()
     got = {(r["source"], r["record_no"]): r["raw"]
