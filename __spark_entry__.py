@@ -66,10 +66,10 @@ def _fan(df: DataFrame) -> DataFrame:
     An explicit round-robin repartition is the only way the work fans
     out; it is sized from the session's parallelism (scale-adaptive,
     never a constant) and shuffles only the few narrow columns the
-    query projects.  On a real multi-file table the scan itself fans
-    out and this repartition coalesces to a no-op-sized shuffle of
-    already-parallel input — cheap insurance either way for a
-    Python-boundary operator, per guide §2.5/§4."""
+    query projects.  It is not free on other input: on a multi-file
+    scan that already yields enough partitions, the round-robin
+    repartition is still a full extra exchange of every projected
+    column, all rows written to and read back from shuffle files."""
     sc = df.sparkSession.sparkContext
     return df.repartition(sc.defaultParallelism)
 

@@ -15,6 +15,13 @@ When a runtime jar is present (a real cluster), callers get:
     cols).createOrReplace()`, i.e. snapshot-isolated per-sink commits,
     which is what makes the pipeline's bucket-resume (pipeline.py)
     transactional instead of directory-rename-based.
+
+Local parquet sinks are written through `NoForkLocalFileSystem`
+(pysyslog.localfs): no `.crc` sidecars, and file and directory
+permissions set through the JDK instead of one forked `chmod` per path.
+When its jar cannot be built or loaded (no JDK, say) they fall back to
+Hadoop's `RawLocalFileSystem` with one warning; the files and their
+modes are the same, only the forks come back.
 """
 
 from __future__ import annotations
@@ -22,6 +29,8 @@ from __future__ import annotations
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .localfs import local_fs_impl
 
 _PROBE_CACHE: dict[int, bool] = {}
 
@@ -94,21 +103,25 @@ def write_partitioned(
         return iceberg_table
     # Per-write Hadoop options: they reach this write's job committer
     # and task conf only, so the session (which may pin committer v2)
-    # is left untouched.  Without libhadoop the local
-    # filesystem forks a `chmod` for every path it creates, which made
-    # the fan-out's fixed per-sink cost dominate the route write (~880
-    # forks for 191 sinks).  The rename commit (v1, Spark's default)
-    # moves whole task directories, where v2's merge runs `mkdirs` on
-    # every partition directory of the destination; v1 also avoids v2's
-    # partial-commit caveat (MAPREDUCE-7282).
+    # is left untouched.  Without libhadoop the stock local filesystem
+    # forks a `chmod` for every path it creates, which made the
+    # fan-out's fixed per-sink cost dominate the route write (~880
+    # forks for 191 sinks with checksums, 472 on RawLocalFileSystem,
+    # none on NoForkLocalFileSystem; RawLocalFileSystem is the fallback
+    # when that class cannot be built or loaded).  The rename commit
+    # (v1, Spark's default) moves whole task directories, where v2's
+    # merge runs `mkdirs` on every partition directory of the
+    # destination; v1 also avoids v2's partial-commit caveat
+    # (MAPREDUCE-7282).
     options = {"maxRecordsPerFile": str(max_records_per_file),
                "mapreduce.fileoutputcommitter.algorithm.version": "1",
                **(writer_options or {})}
     if urlparse(parquet_path).scheme in ("", "file"):
-        # local sinks skip the checksummed LocalFileSystem: no `.crc`
-        # sidecar, and no `chmod` for it, per file.  The cache must be
-        # off, or the session's cached checksummed instance wins.
-        options["fs.file.impl"] = "org.apache.hadoop.fs.RawLocalFileSystem"
+        # local sinks skip the checksummed LocalFileSystem (no `.crc`
+        # sidecar per file) and, through pysyslog.localfs, the `chmod`
+        # forks.  The cache must be off, or the session's cached
+        # checksummed instance wins.
+        options["fs.file.impl"] = local_fs_impl(spark)
         options["fs.file.impl.disable.cache"] = "true"
     writer = df.write.mode(mode).options(**options)
     writer.partitionBy(*partition_cols).parquet(parquet_path)

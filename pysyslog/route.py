@@ -30,7 +30,8 @@ MIN_SALT_ROWS = 50_000
 # near-unique values (raw lines, message bodies, timestamps, ids), and
 # falls back to PLAIN — paying the dictionary build for nothing.
 # Measured on 4 vCPU (warm persisted frame, a REBALANCE(facility_name,
-# severity_name) write of the same 191 sinks): 600k lines 5.22 s with
+# severity_name) write of the same 191 sinks, on the chmod-forking
+# RawLocalFileSystem before pysyslog.localfs): 600k lines 5.22 s with
 # these options against 7.07 s without (median of 7), 40k lines 1.73 s
 # against 1.91 s.  The output is 0.1% smaller with them: these columns
 # were ending up PLAIN after the fallback anyway.  Low-cardinality columns
@@ -73,21 +74,25 @@ def route_by_facility_severity(
     thus spreads across write tasks instead of serializing into one
     straggler, while small sinks keep one right-sized file.
 
-    Measured on 4 vCPU: at 40k lines the sizing job took 0.28 s, two of
-    the route's four jobs, and no sink reached 2 × target, hence the
-    floor.  At 600k lines (persisted input, warm) it took 0.24 s of a
-    5.8 s route, and a uniform width of 1 was 5.3 s: on 4 cores a sink
-    must hold over 1/parallelism of the rows to salt, which the
-    generator's hottest sink (22%) does not.  The adaptive width earns
-    its job where parallelism is high or one sink dominates.  An
-    unpersisted input would re-run its whole lineage (the parse UDF)
-    for the count, so it is written at width 1 with a warning.
+    Measured on 4 vCPU, with local sinks on the chmod-forking
+    RawLocalFileSystem (pysyslog.localfs has since cut the warm
+    40k-line route from 1.7 to 0.9 s): at 40k lines the sizing job took
+    0.28 s, two of the route's four jobs, and no sink reached
+    2 × target, hence the floor.  At 600k lines (persisted input, warm)
+    it took 0.24 s of a 5.8 s route, and a uniform width of 1 was
+    5.3 s: on 4 cores a sink must hold over 1/parallelism of the rows
+    to salt, which the generator's hottest sink (22%) does not.  The
+    adaptive width earns its job where parallelism is high or one sink
+    dominates.  An unpersisted input would re-run its whole lineage
+    (the parse UDF) for the count, so it is written at width 1 with a
+    warning.
 
     A REBALANCE(facility_name, severity_name) hint in place of the salt
-    wrote the same files and bytes but was slower on 4 vCPU (40k lines
-    1.73 s against 1.64 s, 600k lines 5.55 s against 5.24 s, medians):
-    AQE packs the unsalted keys' 16 hash buckets into 5 write tasks, a
-    second wave on 4 cores, where the salted key gives 4.
+    wrote the same files and bytes but was slower on 4 vCPU, again on
+    the forking filesystem (40k lines 1.73 s against 1.64 s, 600k lines
+    5.55 s against 5.24 s, medians): AQE packs the unsalted keys' 16
+    hash buckets into 5 write tasks, a second wave on 4 cores, where the
+    salted key gives 4.
 
     With an Iceberg runtime on the classpath and `iceberg_table` given,
     the identical DataFrame goes through `writeTo(...)` with identity
