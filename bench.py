@@ -297,10 +297,6 @@ def make_spark(cpus: int):
         # task (skewed sink, GC pause) doesn't gate the whole stage —
         # and the count GROWS with the cluster, as it must at scale
         .config("spark.sql.shuffle.partitions", str(max(cpus * 4, 8)))
-        # commit renames inside tasks (v2) for the session's other
-        # writes; the route write does not use it, it sets v1 per write
-        # (see iceberg.write_partitioned)
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         # small corpus files must still fan out across all cores at the
         # SCAN, so parallelism comes from the read instead of a
         # full-corpus repartition shuffle

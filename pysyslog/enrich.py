@@ -16,9 +16,10 @@ from pyspark.sql import DataFrame, functions as F
 from .tables import facility_dim, severity_dim
 
 
-def host_dim(spark, n_hosts: int = 400) -> DataFrame:
-    """Deterministic GeoIP-style host dimension (FIXTURES.md §3)."""
-    from .gen import _hostname
+def host_dim(spark) -> DataFrame:
+    """Deterministic GeoIP-style host dimension over the generator's
+    host pool (FIXTURES.md §3)."""
+    from .gen import N_HOSTS, _hostname
 
     from .tables import _values_relation
 
@@ -32,7 +33,7 @@ def host_dim(spark, n_hosts: int = 400) -> DataFrame:
     # LocalRelation — broadcast driver-side with no job (see
     # tables._values_relation).
     rows: dict[str, tuple] = {}
-    for r in range(n_hosts):
+    for r in range(N_HOSTS):
         name = _hostname(r)
         host = name.split(".")[0] if not name[0].isdigit() else name
         rows.setdefault(
@@ -50,11 +51,11 @@ def host_dim(spark, n_hosts: int = 400) -> DataFrame:
     )
 
 
-def enrich(parsed: DataFrame, spark=None, with_host_dim: bool = True) -> DataFrame:
+def enrich(parsed: DataFrame) -> DataFrame:
     """Attach severity_name/facility_name from the dimension tables and
     host geo metadata.  Unparseable PRIs keep NULL names; rows without a
     PRI fall back to user/notice (the syslogd default, RFC 3164 §4.1.1)."""
-    spark = spark or parsed.sparkSession
+    spark = parsed.sparkSession
     sev = severity_dim(spark).withColumnRenamed("severity_int", "__sev_int")
     fac = facility_dim(spark).withColumnRenamed("facility_int", "__fac_int")
     out = (
@@ -70,6 +71,4 @@ def enrich(parsed: DataFrame, spark=None, with_host_dim: bool = True) -> DataFra
         )
         .drop("__sev_int", "__fac_int")
     )
-    if with_host_dim:
-        out = out.join(F.broadcast(host_dim(spark)), on="host", how="left")
-    return out
+    return out.join(F.broadcast(host_dim(spark)), on="host", how="left")

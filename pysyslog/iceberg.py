@@ -8,13 +8,11 @@ partitioned parquet — the SAME DataFrame and partition columns either
 way, so the plan shape (single scan, repartition-on-sink-keys, one
 partitioned write) is identical and only the committer differs.
 
-When a runtime jar is present (a real cluster), callers get:
-  * `ensure_catalog` — registers a hadoop-type catalog over a warehouse
-    path (config-only; no-op if already set);
-  * `write_partitioned` — `df.writeTo(table).partitionedBy(identity
-    cols).createOrReplace()`, i.e. snapshot-isolated per-sink commits,
-    which is what makes the pipeline's bucket-resume (pipeline.py)
-    transactional instead of directory-rename-based.
+When a runtime jar is present (a real cluster), `write_partitioned`
+runs `df.writeTo(table).partitionedBy(identity cols).createOrReplace()`,
+i.e. snapshot-isolated per-sink commits, which is what makes the
+pipeline's bucket-resume (pipeline.py) transactional instead of
+directory-rename-based.
 
 Local parquet sinks are written through `NoForkLocalFileSystem`
 (pysyslog.localfs): no `.crc` sidecars, and file and directory
@@ -34,6 +32,9 @@ from .localfs import local_fs_impl
 
 _PROBE_CACHE: dict[int, bool] = {}
 
+# row cap of one sink file; route sizes its salt against it too
+MAX_RECORDS_PER_FILE = 1_000_000
+
 
 def iceberg_available(spark: SparkSession) -> bool:
     """True when an Iceberg Spark runtime is on the session classpath.
@@ -52,28 +53,17 @@ def iceberg_available(spark: SparkSession) -> bool:
     return hit
 
 
-def ensure_catalog(spark: SparkSession, name: str, warehouse: str) -> None:
-    """Register a hadoop-type Iceberg catalog over `warehouse` (no-op
-    when already configured)."""
-    base = f"spark.sql.catalog.{name}"
-    if spark.conf.get(base, None) is None:
-        spark.conf.set(base, "org.apache.iceberg.spark.SparkCatalog")
-        spark.conf.set(f"{base}.type", "hadoop")
-        spark.conf.set(f"{base}.warehouse", warehouse)
-
-
 def write_partitioned(
     df: DataFrame,
     parquet_path: str,
     partition_cols: list[str],
     iceberg_table: str | None = None,
-    mode: str = "overwrite",
-    max_records_per_file: int = 1_000_000,
     writer_options: dict[str, str] | None = None,
 ) -> str:
-    """Partitioned sink write: Iceberg `writeTo` with identity partition
-    transforms when the runtime exists (and a table name is given),
-    else partitioned parquet.  Returns the sink identifier written."""
+    """Partitioned sink write that replaces the sink: Iceberg `writeTo`
+    with identity partition transforms when the runtime exists (and a
+    table name is given), else partitioned parquet in overwrite mode.
+    Returns the sink identifier written."""
     spark = df.sparkSession
     if iceberg_table is not None and iceberg_available(spark):
         from pyspark.sql.functions import col
@@ -81,25 +71,9 @@ def write_partitioned(
         writer = df.writeTo(iceberg_table).using("iceberg").option(
             "write.parquet.row-group-size-bytes", str(64 * 1024 * 1024)
         )
-        # honor DataFrameWriter mode semantics exactly — the module
-        # contract is "same behavior either way, only the committer
-        # differs": append appends, error fails on an existing table,
-        # ignore no-ops on an existing table, overwrite replaces
-        if mode == "append":
-            writer.append()
-        elif mode in ("error", "errorifexists", "ignore"):
-            # 'ignore' must only swallow the table-already-exists case;
-            # a blanket except would report genuine write failures (IO,
-            # schema mismatch, permissions) as success
-            if mode == "ignore" and spark.catalog.tableExists(iceberg_table):
-                return iceberg_table
-            if partition_cols:
-                writer = writer.partitionedBy(*[col(c) for c in partition_cols])
-            writer.create()
-        else:
-            if partition_cols:
-                writer = writer.partitionedBy(*[col(c) for c in partition_cols])
-            writer.createOrReplace()
+        if partition_cols:
+            writer = writer.partitionedBy(*[col(c) for c in partition_cols])
+        writer.createOrReplace()
         return iceberg_table
     # Per-write Hadoop options: they reach this write's job committer
     # and task conf only, so the session (which may pin committer v2)
@@ -113,7 +87,7 @@ def write_partitioned(
     # merge runs `mkdirs` on every partition directory of the
     # destination; v1 also avoids v2's partial-commit caveat
     # (MAPREDUCE-7282).
-    options = {"maxRecordsPerFile": str(max_records_per_file),
+    options = {"maxRecordsPerFile": str(MAX_RECORDS_PER_FILE),
                "mapreduce.fileoutputcommitter.algorithm.version": "1",
                **(writer_options or {})}
     if urlparse(parquet_path).scheme in ("", "file"):
@@ -123,6 +97,6 @@ def write_partitioned(
         # checksummed instance wins.
         options["fs.file.impl"] = local_fs_impl(spark)
         options["fs.file.impl.disable.cache"] = "true"
-    writer = df.write.mode(mode).options(**options)
+    writer = df.write.mode("overwrite").options(**options)
     writer.partitionBy(*partition_cols).parquet(parquet_path)
     return parquet_path

@@ -36,7 +36,7 @@ from pyspark.sql.types import (
 
 from .goldens import canon, canonical_json
 from .options import ParserOptions
-from .parser_core import _DAYS_IN_MONTH, SyslogParser
+from .parser_core import _DAYS_IN_MONTH, SyslogParser, _off_str
 from .tables import MONTH_NUM
 from .tokens import decode_tokens
 
@@ -143,12 +143,13 @@ _PARSER_CACHE: dict = {}
 # cohort of real corpora is "clean BSD" — `Mmm dd HH:MM:SS host prog[pid]:
 # content` with nothing for the later stages (no PRI, no relay/Cisco,
 # no SDATA/JSON/KV applicable under the active options).  For that
-# cohort every output field is computable from ONE anchored regex ran
-# batch-wise by pandas' C engine (`str.extract`), with datetimes
-# resolved once per unique raw timestamp through the parser's memo.
-# Rows that don't match (or whose content could trigger a detection
-# stage) take the state machine unchanged, so outputs are identical —
-# asserted by tests/test_parser_spark.py::test_fast_path_equals_slow.
+# cohort every output field is computable from the groups of ONE
+# anchored regex match per row (`_Groups`), with datetimes derived in
+# one vectorized pass (`_derive_dt_columns`).  Rows that don't match
+# (or whose content could trigger a detection stage) take the state
+# machine unchanged, and `_parse_batch` scatters both cohorts into one
+# frame, so outputs are identical — asserted by
+# tests/test_parser_spark.py::test_fast_path_equals_slow_on_mixed_corpus.
 #
 # Only enabled when emit_parsed_json=False: the fast path reproduces
 # column values, not the reference's present-key hash semantics.
@@ -209,8 +210,8 @@ def _fast_regex(options: ParserOptions):
     # no '/' (so the split rule can't fire); the letter-led start also
     # makes the relay and Cisco stages no-ops (both need digit/ws/':').
     # the datetime COMPONENTS are captured here too (bmon/bday/... for
-    # BSD, iy/imo/... for ISO) so the vectorized derivation works from
-    # this one regex pass instead of re-extracting per cohort
+    # BSD, iy/imo/... for ISO) so the vectorized derivation
+    # (_derive_dt_columns) works from this one regex pass
     prefix = (
         r"^(?:<(?P<pre>\d{1,3})>(?:(?P<ver>\d{1,2})[ \t]++)?)?"
         r"(?:(?P<yr>\d{4})\s(?=[A-Z]))?"
@@ -360,69 +361,6 @@ def _days_from_civil_vec(y, mo, d):
     return era * 146097 + doe - 719468
 
 
-def _bsd_dt_tuples(parser, comps, yrs):
-    """Vectorized datetime derivation for BSD rows from the master
-    regex's component groups (`comps` = parallel lists mon/day/h/mi/s/
-    frac as captured — no second regex pass): explicit year when the
-    line carried a year prefix (`yrs[i]` a 4-digit string, else NaN),
-    otherwise the year-inference rule (local year, minus one if >1 day
-    in the future — parser_core._parse_bsd_datetime / Line.pm:796-802)
-    — applied with numpy civil-date arithmetic.  Rows outside the
-    envelope — unknown month abbr (the month-1 Perl quirk), invalid
-    components (the now-fallback), Feb 29 under inference (leap
-    ambiguity across the candidate years), fractions whose re-render
-    isn't identity — fall back to the per-row memoized path, so output
-    is identical either way."""
-    mon_l, day_l, h_l, mi_l, s_l, fr_l, dts = comps
-    n = len(dts)
-    out = [None] * n
-    mo_num = [_MONTH_1BASED.get(m) if m is not None else None for m in mon_l]
-    ok = [
-        mn is not None and not (f is not None and f.endswith("000"))
-        for mn, f in zip(mo_num, fr_l)
-    ]
-    if any(ok):
-        idx = [i for i, o in enumerate(ok) if o]
-        mo = np.array([mo_num[i] for i in idx], dtype="int64")
-        d = np.array([int(day_l[i]) for i in idx], dtype="int64")
-        h = np.array([int(h_l[i]) for i in idx], dtype="int64")
-        mi = np.array([int(mi_l[i]) for i in idx], dtype="int64")
-        s = np.array([int(s_l[i]) for i in idx], dtype="int64")
-        yv = np.array(
-            [int(yrs[i]) if yrs[i] is not None else parser.local_year
-             for i in idx],
-            dtype="int64",
-        )
-        hy = np.array([yrs[i] is not None for i in idx], dtype=bool)
-        dim = _days_in_month_vec(yv, mo)
-        valid = (
-            (yv >= 1) & (d >= 1) & (d <= dim) & (h <= 23) & (mi <= 59)
-            & (s <= 59) & ~((mo == 2) & (d == 29) & ~hy)
-        )
-        sec = _days_from_civil_vec(yv, mo, d) * 86400 + h * 3600 + mi * 60 + s
-        # "in the future" -> previous year (inference rows only); day
-        # validity is identical in y-1 because inferred Feb 29 rows
-        # are excluded above
-        prev = _days_from_civil_vec(yv - 1, mo, d) * 86400 + h * 3600 + mi * 60 + s
-        sec = np.where(~hy & (sec > int(parser.now_epoch) + 86400), prev, sec)
-        basel = np.datetime_as_string(sec.astype("datetime64[s]"), unit="s").tolist()
-        secl = sec.tolist()
-        validl = valid.tolist()
-        for j, i in enumerate(idx):
-            if validl[j]:
-                f = fr_l[i]
-                fd = "." + f if f is not None else ""
-                b = basel[j]
-                utc = b + fd + "Z"
-                sv = secl[j]
-                us = sv * 1_000_000 + (int(f.ljust(6, "0")) if f is not None else 0)
-                out[i] = (
-                    str(sv) + fd, utc, utc, utc, "Z", b[:10], b[11:] + fd, us,
-                )
-    _dt_fallback(parser, dts, yrs, out)
-    return out
-
-
 def _dt_fallback(parser, dts, yrs, out):
     """Per-row derivation through the state machine's `dt_fields` for
     every row still None in `out` (identical output by construction),
@@ -455,124 +393,102 @@ def _dt_fallback(parser, dts, yrs, out):
         out[i] = t
 
 
-def _iso_dt_tuples(parser, comps, yrs):
-    """Vectorized datetime derivation for ISO rows from the master
-    regex's component groups (`comps` = parallel lists y/mo/d/h/mi/s/
-    frac/off/rest as captured — no second regex pass; offset given or
-    UTC; 0/3/6-digit fractions whose 3/6/9 shortest-exact rendering is
-    the identity).  Rows outside that envelope (trailing junk in
-    `rest`, invalid components, '000'-ended fractions) fall back to
-    the per-row memoized path, so output is identical either way.
-
-    Epoch seconds come from branchless civil-date arithmetic on
-    integer arrays and np.datetime_as_string emits the
-    YYYY-MM-DDTHH:MM:SS prefix in C; everything else is plain-list
-    assembly (faster than np.char fixed-width string ops)."""
-    y_l, mo_l, d_l, h_l, mi_l, s_l, fr_l, off_l, rest_l, dts = comps
-    n = len(dts)
-    out = [None] * n
-    # fractions ending 000 re-render shorter ('.000' -> '', '.123000'
-    # -> '.123'): not identity, so those rows take the per-row path
-    ok = [
-        r == "" and not (f is not None and f.endswith("000"))
-        for r, f in zip(rest_l, fr_l)
-    ]
-    if any(ok):
-        idx = [i for i, o in enumerate(ok) if o]
-        y = np.array([int(y_l[i]) for i in idx], dtype="int64")
-        mo = np.array([int(mo_l[i]) for i in idx], dtype="int64")
-        d = np.array([int(d_l[i]) for i in idx], dtype="int64")
-        h = np.array([int(h_l[i]) for i in idx], dtype="int64")
-        mi = np.array([int(mi_l[i]) for i in idx], dtype="int64")
-        s = np.array([int(s_l[i]) for i in idx], dtype="int64")
-        valid = (
-            (y >= 1) & (mo >= 1) & (mo <= 12) & (d >= 1)
-            & (h <= 23) & (mi <= 59) & (s <= 59)
-        )
-        valid &= d <= _days_in_month_vec(y, mo)
-        offm = [
-            0 if (o is None or o == "Z")
-            else (-1 if o[0] == "-" else 1)
-            * (int(o[1:3]) * 60 + int(o.replace(":", "")[3:5]))
-            for o in (off_l[i] for i in idx)
-        ]
-        offv = np.array(offm, dtype="int64")
-        sec = _days_from_civil_vec(y, mo, d) * 86400 + h * 3600 + mi * 60 + s - offv * 60
-        basel = np.datetime_as_string(sec.astype("datetime64[s]"), unit="s").tolist()
-        secl = sec.tolist()
-        validl = valid.tolist()
-        for j, i in enumerate(idx):
-            if not validl[j]:
-                continue
-            f = fr_l[i]
-            fd = "." + f if f is not None else ""
-            b = basel[j]
-            utc = b + fd + "Z"
-            sv = secl[j]
-            us = sv * 1_000_000 + (int(f.ljust(6, "0")) if f is not None else 0)
-            if offm[j] == 0:
-                out[i] = (
-                    str(sv) + fd, utc, utc, utc, "Z", b[:10], b[11:] + fd, us,
-                )
-            else:
-                # non-zero offsets: wall components are the input's own
-                # fields; tz is the normalized +hhmm form
-                o = off_l[i]
-                offn = o[0] + o.replace(":", "")[1:5]
-                date_part = f"{y_l[i]}-{mo_l[i]}-{d_l[i]}"
-                time_part = f"{h_l[i]}:{mi_l[i]}:{s_l[i]}{fd}"
-                out[i] = (
-                    str(sv) + fd, utc, utc,
-                    date_part + "T" + time_part + offn, offn,
-                    date_part, time_part, us,
-                )
-    _dt_fallback(parser, dts, yrs, out)
-    return out
-
-
 def _derive_dt_columns(parser, ext, dt_list, yr_list):
     """The datetime-derivation stage of the fast path: the 8 derived
     column lists (epoch, the three rendered strings, tz, date, time,
-    epoch_us) for the batch.  Skipped entirely when DateParsing=0."""
-    n = len(dt_list)
-    tups: list = [None] * n
+    epoch_us) for the batch.  Skipped entirely when DateParsing=0.
+
+    One rule set for both timestamp shapes (⇔ Line.pm:766-824), worked
+    from the master regex's component groups (no second regex pass).
+    Each row's groups are read once into (year, month, day, h, m, s,
+    offset_min, infer_year): BSD rows have offset 0 and infer the year
+    unless the line carried a year prefix; ISO rows carry their own
+    offset (none or 'Z' is UTC).  One numpy validity mask and one
+    civil-date epoch follow, with the previous-year rule ("more than a
+    day in the future", Line.pm:800-802) on inference rows only, then
+    one render loop: np.datetime_as_string emits the
+    YYYY-MM-DDTHH:MM:SS prefix in C, the rest is plain string assembly.
+
+    Rows outside that envelope take `_dt_fallback`, so output is
+    identical either way: an unknown month abbr (the month-1 Perl
+    quirk), invalid components (the now-fallback), Feb 29 under
+    inference (leap ambiguity across the candidate years), ISO trailing
+    junk, and fractions ending '000' (their shortest-exact 3/6/9-digit
+    re-render is not the identity).  So does every row under a local
+    zone or a custom time_format."""
+    tups: list = [None] * len(dt_list)
     if parser.local_offset_min == 0 and parser._tm_render is None:
-        # both cohorts derive vectorized (numpy civil-date arithmetic)
-        # straight from the master regex's component groups: ISO
-        # strings are near-unique (micros), and BSD strings at second
-        # granularity defeat the memo on wide-time-range corpora
-        bsd_mask = [s[0].isalpha() for s in dt_list]
-
-        def _sel(names, pos):
-            collists = [ext.col(c) for c in names]
-            return [[cl[i] for i in pos] for cl in collists]
-
-        iso_pos = [i for i, b in enumerate(bsd_mask) if not b]
-        if iso_pos:
-            comps = _sel(
-                ["iy", "imo", "iday", "ih", "imi", "isec", "ifr", "ioff",
-                 "irest"], iso_pos)
-            comps.append([dt_list[i] for i in iso_pos])
-            iso_tups = _iso_dt_tuples(parser, comps,
-                                      [yr_list[i] for i in iso_pos])
-            for j, i in enumerate(iso_pos):
-                tups[i] = iso_tups[j]
-        bsd_pos = [i for i, b in enumerate(bsd_mask) if b]
-        if bsd_pos:
-            comps = _sel(["bmon", "bday", "bh", "bmi", "bs", "bfr"], bsd_pos)
-            comps.append([dt_list[i] for i in bsd_pos])
-            bsd_tups = _bsd_dt_tuples(parser, comps,
-                                      [yr_list[i] for i in bsd_pos])
-            for j, i in enumerate(bsd_pos):
-                tups[i] = bsd_tups[j]
-    else:
-        # a local zone or a custom time_format: the state machine's
-        # derivation, once per distinct timestamp
-        _dt_fallback(parser, dt_list, yr_list, tups)
+        g = ext.idx
+        yr_i, bmon, bday, bh, bmi, bs, bfr = (
+            g[k] for k in ("yr", "bmon", "bday", "bh", "bmi", "bs", "bfr"))
+        iy, imo, iday, ih, imi, isec, ifr, ioff, irest = (
+            g[k] for k in ("iy", "imo", "iday", "ih", "imi", "isec", "ifr",
+                           "ioff", "irest"))
+        local_year = parser.local_year
+        pos, comps, fracs = [], [], []
+        for i, t in enumerate(ext.tups):
+            if t[bmon] is not None:
+                mo, f, yr = _MONTH_1BASED.get(t[bmon]), t[bfr], t[yr_i]
+                if mo is None or (f is not None and f.endswith("000")):
+                    continue
+                comps.append((
+                    local_year if yr is None else int(yr), mo, int(t[bday]),
+                    int(t[bh]), int(t[bmi]), int(t[bs]), 0, yr is None))
+            else:
+                f, o = t[ifr], t[ioff]
+                if t[irest] or (f is not None and f.endswith("000")):
+                    continue
+                off = (0 if o is None or o == "Z"
+                       else (-1 if o[0] == "-" else 1)
+                       * (int(o[1:3]) * 60 + int(o[-2:])))
+                comps.append((
+                    int(t[iy]), int(t[imo]), int(t[iday]), int(t[ih]),
+                    int(t[imi]), int(t[isec]), off, False))
+            pos.append(i)
+            fracs.append(f)
+        if comps:
+            y, mo, d, h, mi, s, off, infer = np.array(comps, dtype="int64").T
+            infer = infer.astype(bool)
+            valid = (
+                (y >= 1) & (mo >= 1) & (mo <= 12) & (d >= 1)
+                & (d <= _days_in_month_vec(y, mo)) & (h <= 23) & (mi <= 59)
+                & (s <= 59) & ~(infer & (mo == 2) & (d == 29))
+            )
+            tod = h * 3600 + mi * 60 + s
+            sec = _days_from_civil_vec(y, mo, d) * 86400 + tod - off * 60
+            # inference rows have offset 0, and their day is valid in
+            # y-1 too because inferred Feb 29 rows are excluded above
+            prev = _days_from_civil_vec(y - 1, mo, d) * 86400 + tod
+            sec = np.where(infer & (sec > int(parser.now_epoch) + 86400),
+                           prev, sec)
+            keep = np.flatnonzero(valid)
+            sec, off = sec[keep], off[keep]
+            utcl = np.datetime_as_string(sec.astype("datetime64[s]"),
+                                         unit="s").tolist()
+            # a non-zero offset renders datetime_str/date/time on the
+            # wall clock at that offset, with tz in the +hhmm form
+            nz = off != 0
+            wall = iter(np.datetime_as_string(
+                (sec[nz] + off[nz] * 60).astype("datetime64[s]"),
+                unit="s").tolist())
+            for j, sv, b, o in zip(keep.tolist(), sec.tolist(), utcl,
+                                   off.tolist()):
+                f = fracs[j]
+                fd = "." + f if f is not None else ""
+                utc = b + fd + "Z"
+                us = sv * 1_000_000 + (int(f.ljust(6, "0")) if f is not None else 0)
+                if o == 0:
+                    tups[pos[j]] = (str(sv) + fd, utc, utc, utc, "Z",
+                                    b[:10], b[11:] + fd, us)
+                else:
+                    w, tz = next(wall), _off_str(o)
+                    tups[pos[j]] = (str(sv) + fd, utc, utc, w + fd + tz, tz,
+                                    w[:10], w[11:] + fd, us)
+    _dt_fallback(parser, dt_list, yr_list, tups)
     return (list(t) for t in zip(*tups))
 
 
-def _fast_cols(parser, raw_list, ext: pd.DataFrame, options,
+def _fast_cols(parser, raw_list, ext: _Groups, options,
                field_names) -> dict:
     """Column lists for fast-path rows.  Single-pass list assembly —
     no per-field pandas .map (each would cost a Python call per row)."""
@@ -654,16 +570,15 @@ def _fast_cols(parser, raw_list, ext: pd.DataFrame, options,
                 name, _, sub = p.partition("/")
                 prog[i] = name
                 sub_out[i] = sub
-        if ext.has("nprog"):
-            # NetApp bracket-form rows: praw/prog come from the 3-way
-            # split groups (⇔ parser_core.py:724-736; program_raw is
-            # the bracket WITHOUT the trailing colon)
-            nh = ext.col("nhost")
-            nl = ext.col("nlev")
-            for i, p in enumerate(ext.col("nprog")):
-                if isinstance(p, str):
-                    praw[i] = f"[{nh[i]} {p}:{nl[i]}]"
-                    prog[i] = p
+        # NetApp bracket-form rows: praw/prog come from the 3-way
+        # split groups (⇔ parser_core.py:724-736; program_raw is the
+        # bracket WITHOUT the trailing colon)
+        nh = ext.col("nhost")
+        nl = ext.col("nlev")
+        for i, p in enumerate(ext.col("nprog")):
+            if isinstance(p, str):
+                praw[i] = f"[{nh[i]} {p}:{nl[i]}]"
+                prog[i] = p
         cols["program_raw"] = praw
         cols["program_name"] = prog
         cols["program_pid"] = [p if isinstance(p, str) else None
@@ -682,17 +597,16 @@ def _fast_cols(parser, raw_list, ext: pd.DataFrame, options,
         # (⇔ the state machine skipping its program stage); message is
         # the PRE-splice content, which is non-empty by the cohort regex
         cols["message"] = list(content)
-    if ext.has("cdt"):
-        # Cisco rows (either variant): a matched second timestamp sets
-        # ntp from the flag (⇔ parser_core.py:688-695); a bare SEQ
-        # (cdt absent) leaves ntp unset, like the slow path
-        cfl = ext.col("cflag")
-        ntp_out = cols["ntp"]
-        for i, cd in enumerate(ext.col("cdt")):
-            if isinstance(cd, str):
-                f = cfl[i]
-                ntp_out[i] = ("out of sync" if f == "." else
-                              "not configured" if f == "*" else "ok")
+    # Cisco rows (either variant): a matched second timestamp sets ntp
+    # from the flag (⇔ parser_core.py:688-695); a bare SEQ (cdt absent)
+    # leaves ntp unset, like the slow path
+    cfl = ext.col("cflag")
+    ntp_out = cols["ntp"]
+    for i, cd in enumerate(ext.col("cdt")):
+        if isinstance(cd, str):
+            f = cfl[i]
+            ntp_out[i] = ("out of sync" if f == "." else
+                          "not configured" if f == "*" else "ok")
     # Structured-data splice (strict or loose, per options) through the
     # SAME stage bodies as the state machine (parser_core.
     # strict_sdata_splice / loose_sdata_splice): rewrites content and
@@ -803,90 +717,67 @@ def _slow_cols(parser, raw_list, field_names, plain_fields,
     return cols
 
 
-def _typed_frame(cols, index, field_names) -> pd.DataFrame:
-    """Columns dict -> DataFrame without float coercion: pandas turns
-    an int+None list into float64, which ROUNDS epoch_us above 2^53
-    (post-2255 timestamps).  EVERY column is wrapped as an object
-    ndarray up front: object dtype keeps ints exact for Arrow, and
-    pre-built ndarrays skip pandas' per-column sanitize/platform-cast
-    path entirely (measured ~0.7µs/row on a 36-column batch)."""
-    data = {}
-    for f in field_names:
-        v = cols[f]
-        if isinstance(v, np.ndarray):
-            data[f] = v
-        else:
-            a = np.empty(len(v), dtype=object)
-            a[:] = v
-            data[f] = a
-    return pd.DataFrame(data, index=index, columns=field_names, copy=False)
-
-
-def _slow_frame(parser, raw: pd.Series, field_names, plain_fields,
-                emit_parsed_json) -> pd.DataFrame:
-    cols = _slow_cols(parser, raw.tolist(), field_names, plain_fields,
-                      emit_parsed_json)
-    return _typed_frame(cols, raw.index, field_names)
-
-
 def _parse_batch(parser, raw: pd.Series, options, field_names, plain_fields,
-                 emit_parsed_json, fast_re) -> pd.DataFrame:
+                 emit_parsed_json, fast_re=None) -> pd.DataFrame:
     """Split a batch into the vectorized clean-line cohort and the
-    state-machine remainder; outputs are row-identical either way."""
-    if fast_re is None or emit_parsed_json or len(raw) == 0:
-        return _slow_frame(parser, raw, field_names, plain_fields,
-                           emit_parsed_json)
+    state-machine remainder; outputs are row-identical either way.
+    `fast_re=None` (or emit_parsed_json) parses every row with the state
+    machine.
+
+    Each cohort's column lists are scattered into one object ndarray
+    per field: object dtype keeps ints exact for Arrow (pandas would
+    turn an int+None list into float64, which ROUNDS epoch_us above
+    2^53, i.e. post-2255 timestamps), and pre-built ndarrays skip
+    pandas' per-column sanitize/platform-cast path."""
     raw_list = raw.tolist()
-    rxm = fast_re.match
-    tups = [
-        m.groups() if s is not None and (m := rxm(s)) else None
-        for s in raw_list
-    ]
-    gi = fast_re.groupindex
-    n = len(tups)
-    if "prog" in gi:
-        pi = gi["prog"] - 1
-        # NetApp bracket-form rows join the cohort only when a PRI
-        # preamble parsed: without one the slow path's level-fills-
-        # priority rule could fire (parser_core.py:733-735), which
-        # the vectorized assembly doesn't replicate
-        ni, prei = gi["nprog"] - 1, gi["pre"] - 1
-        mask = np.fromiter(
-            (
-                t is not None
-                and ((t[pi] is not None and t[pi] not in _PRIO_WORDS)
-                     or (t[ni] is not None and t[prei] is not None))
-                for t in tups
-            ),
-            bool, n,
-        )
-    else:
-        # no-program variant: nothing downstream rewrites the matched
-        # rest-of-line outside the shared splice bodies, so a match
-        # alone is cohort membership (the severity-word filter only
-        # exists for the program-name split)
-        mask = np.fromiter((t is not None for t in tups), bool, n)
-    if not mask.any():
-        return _slow_frame(parser, raw, field_names, plain_fields,
-                           emit_parsed_json)
-    idx = {name: num - 1 for name, num in gi.items()}
-    if mask.all():
-        cols = _fast_cols(parser, raw_list, _Groups(tups, idx), options,
-                          field_names)
-        return _typed_frame(cols, raw.index, field_names)
+    n = len(raw_list)
+    mask = np.zeros(n, dtype=bool)
+    if fast_re is not None and not emit_parsed_json:
+        rxm = fast_re.match
+        tups = [
+            m.groups() if s is not None and (m := rxm(s)) else None
+            for s in raw_list
+        ]
+        gi = fast_re.groupindex
+        if "prog" in gi:
+            pi = gi["prog"] - 1
+            # NetApp bracket-form rows join the cohort only when a PRI
+            # preamble parsed: without one the slow path's level-fills-
+            # priority rule could fire (parser_core.py:733-735), which
+            # the vectorized assembly doesn't replicate
+            ni, prei = gi["nprog"] - 1, gi["pre"] - 1
+            mask = np.fromiter(
+                (
+                    t is not None
+                    and ((t[pi] is not None and t[pi] not in _PRIO_WORDS)
+                         or (t[ni] is not None and t[prei] is not None))
+                    for t in tups
+                ),
+                bool, n,
+            )
+        else:
+            # no-program variant: nothing downstream rewrites the matched
+            # rest-of-line outside the shared splice bodies, so a match
+            # alone is cohort membership (the severity-word filter only
+            # exists for the program-name split)
+            mask = np.fromiter((t is not None for t in tups), bool, n)
+    cohorts = []
     pos_fast = np.flatnonzero(mask)
+    if pos_fast.size:
+        idx = {name: num - 1 for name, num in gi.items()}
+        cohorts.append((pos_fast, _fast_cols(
+            parser, [raw_list[i] for i in pos_fast],
+            _Groups([tups[i] for i in pos_fast], idx), options, field_names)))
     pos_slow = np.flatnonzero(~mask)
-    fast = _fast_cols(parser, [raw_list[i] for i in pos_fast],
-                      _Groups([tups[i] for i in pos_fast], idx), options,
-                      field_names)
-    slow = _slow_cols(parser, [raw_list[i] for i in pos_slow], field_names,
-                      plain_fields, emit_parsed_json)
+    if pos_slow.size:
+        cohorts.append((pos_slow, _slow_cols(
+            parser, [raw_list[i] for i in pos_slow], field_names,
+            plain_fields, emit_parsed_json)))
     out: dict = {}
-    n = len(raw)
     for f in field_names:
         arr = np.empty(n, dtype=object)
-        arr[pos_fast] = fast[f]
-        arr[pos_slow] = slow[f]
+        for pos, cols in cohorts:
+            arr[pos] = cols[f]
         out[f] = arr
     return pd.DataFrame(out, index=raw.index, columns=field_names, copy=False)
 
@@ -967,14 +858,13 @@ def parse_syslog_tokens(
     df: DataFrame,
     tokens_col: str = "tokens",
     options: ParserOptions | None = None,
-    struct_col: str = "syslog",
 ) -> DataFrame:
     """Fused scan-side operator: detokenize+parse in one Arrow crossing,
     flattened, with the JVM-derived ts column (like parse_syslog)."""
     options = options or ParserOptions()
     udf = make_parse_tokens_udf(options)
-    out = df.withColumn(struct_col, udf(F.col(tokens_col)))
-    out = out.select(*df.columns, f"{struct_col}.*")
+    out = df.withColumn("syslog", udf(F.col(tokens_col)))
+    out = out.select(*df.columns, "syslog.*")
     return out.withColumn("ts", F.timestamp_micros(F.col("epoch_us")))
 
 
@@ -983,22 +873,16 @@ def parse_syslog(
     raw_col: str | Column = "raw",
     options: ParserOptions | None = None,
     emit_parsed_json: bool = False,
-    flatten: bool = True,
-    struct_col: str = "syslog",
 ) -> DataFrame:
-    """parse operator: adds the parsed struct (or its flattened fields).
+    """parse operator: adds the parsed fields as top-level columns plus
+    a JVM-derived `ts` timestamp (from epoch_us; stays in whole-stage
+    codegen for all downstream windowing).
 
-    ⇔ parse_syslog_line applied column-wise (Line.pm:704-1014).  With
-    flatten=True, fields become top-level columns plus a JVM-derived
-    `ts` timestamp (from epoch_us; stays in whole-stage codegen for all
-    downstream windowing).
+    ⇔ parse_syslog_line applied column-wise (Line.pm:704-1014).
     """
     options = options or ParserOptions()
     udf = make_parse_udf(options, emit_parsed_json)
     col = F.col(raw_col) if isinstance(raw_col, str) else raw_col
-    out = df.withColumn(struct_col, udf(col))
-    if flatten:
-        existing = [c for c in df.columns]
-        out = out.select(*existing, f"{struct_col}.*")
-        out = out.withColumn("ts", F.timestamp_micros(F.col("epoch_us")))
-    return out
+    out = df.withColumn("syslog", udf(col))
+    out = out.select(*df.columns, "syslog.*")
+    return out.withColumn("ts", F.timestamp_micros(F.col("epoch_us")))

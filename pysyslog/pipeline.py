@@ -90,7 +90,6 @@ def run_pipeline(
     out_dir: str,
     options: ParserOptions,
     n_buckets: int = 4,
-    verify_roundtrip: bool = True,
 ) -> dict:
     """Bucketed, resumable batch run. Returns the manifest."""
     manifest = load_manifest(out_dir)
@@ -105,16 +104,18 @@ def run_pipeline(
         part = tokens_df.filter(bucket_col == b)
         enriched = transform(part.repartition(parallelism * 2), options).persist()
 
-        m: dict = {"bucket": b}
-        if verify_roundtrip:
-            m["roundtrip_violations"] = roundtrip_violations(detokenize(part)).count()
+        m: dict = {
+            "bucket": b,
+            "roundtrip_violations":
+                roundtrip_violations(detokenize(part)).count(),
+        }
 
         # one job for both manifest counts
         m["rows_in"], m["parse_no_ts"] = enriched.agg(
             F.count(F.lit(1)), F.count_if(F.col("ts").isNull())
         ).first()
         route_by_facility_severity(
-            enriched, os.path.join(out_dir, f"bucket={b}"), mode="overwrite",
+            enriched, os.path.join(out_dir, f"bucket={b}"),
             rows_hint=m["rows_in"],
         )
         # one shuffled aggregate feeds BOTH the hourly table and the

@@ -17,6 +17,8 @@ import warnings
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
+from .iceberg import MAX_RECORDS_PER_FILE, write_partitioned
+
 
 ROUTE_COLS = ["facility_name", "severity_name"]
 
@@ -52,25 +54,22 @@ NO_DICT_WRITER_OPTIONS = {
 def route_by_facility_severity(
     enriched: DataFrame,
     out_dir: str,
-    mode: str = "overwrite",
-    max_records_per_file: int = 1_000_000,
-    files_per_sink: int | None = None,
     rows_hint: int | None = None,
     iceberg_table: str | None = None,
 ) -> str:
     """One partitioned write that fans the input out into one sink per
-    (facility, severity).  The input is repartitioned on (sink keys,
-    salt) first: without that every write task opens a parquet writer
-    for every sink it sees (tasks × sinks tiny files, measured 4x slower
-    at bench scale); with it each sink is written by `width` tasks.
+    (facility, severity), replacing what `out_dir` held.  The input is
+    repartitioned on (sink keys, salt) first: without that every write
+    task opens a parquet writer for every sink it sees (tasks × sinks
+    tiny files, measured 4x slower at bench scale); with it each sink
+    is written by `width` tasks.
 
-    The salt width is per sink.  `files_per_sink` forces one uniform
-    width (4 when neither it nor `rows_hint` is given).  Otherwise every
-    sink gets width 1, i.e. one file, unless `rows_hint` exceeds
+    The salt width is per sink.  Every sink gets width 1, i.e. one
+    file, unless `rows_hint` (the input's row count) exceeds
     2 × MIN_SALT_ROWS: then one partial-agg count job sizes the sinks,
     and a sink holding more than 2 × target rows gets width
     ceil(rows / target), capped at 2 × parallelism, where target =
-    min(max_records_per_file, total // (2 × parallelism)).  A hot sink
+    min(MAX_RECORDS_PER_FILE, total // (2 × parallelism)).  A hot sink
     thus spreads across write tasks instead of serializing into one
     straggler, while small sinks keep one right-sized file.
 
@@ -98,43 +97,38 @@ def route_by_facility_severity(
     the identical DataFrame goes through `writeTo(...)` with identity
     partition transforms instead (pysyslog.iceberg) — snapshot commits,
     same plan shape."""
-    from .iceberg import write_partitioned
-
     base = (
         enriched.withColumn("facility_name", F.coalesce("facility_name", F.lit("__unknown")))
         .withColumn("severity_name", F.coalesce("severity_name", F.lit("__unknown")))
     )
     width = F.lit(1)
-    if files_per_sink is not None or rows_hint is None:
-        width = F.lit(4 if files_per_sink is None else files_per_sink)
-    elif rows_hint > 2 * MIN_SALT_ROWS:
+    if rows_hint is not None and rows_hint > 2 * MIN_SALT_ROWS:
         if enriched.storageLevel == StorageLevel.NONE:
             warnings.warn(
                 "route input is not persisted: sizing its sinks would "
                 "re-run its lineage, so every sink is written as one file",
                 stacklevel=2)
         else:
-            width = _sink_widths(base, max_records_per_file)
+            width = _sink_widths(base)
     salt = F.pmod(F.xxhash64("doc_id"), width)
 
     path = os.path.join(out_dir, "by_facility_severity")
     routed = base.repartition(
         F.col("facility_name"), F.col("severity_name"), salt)
     return write_partitioned(
-        routed, path, ROUTE_COLS, iceberg_table=iceberg_table, mode=mode,
-        max_records_per_file=max_records_per_file,
+        routed, path, ROUTE_COLS, iceberg_table=iceberg_table,
         writer_options=NO_DICT_WRITER_OPTIONS,
     )
 
 
-def _sink_widths(base: DataFrame, max_records_per_file: int):
+def _sink_widths(base: DataFrame):
     """Per-sink salt width as a column expression: one count job over
     the sink keys (≤ sinks rows collected), then width ceil(rows /
     target) for each sink above 2 × target, width 1 for the rest."""
     par = base.sparkSession.sparkContext.defaultParallelism
     counts = base.groupBy("facility_name", "severity_name").count().collect()
     total = sum(r["count"] for r in counts)
-    target = max(1, min(max_records_per_file, total // (2 * par)))
+    target = max(1, min(MAX_RECORDS_PER_FILE, total // (2 * par)))
     # at most total/(2*target) ≈ parallelism sinks can exceed
     # 2*target, so this when-chain stays short at any scale
     width = F.lit(1)

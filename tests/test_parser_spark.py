@@ -111,7 +111,7 @@ def test_fast_path_equals_slow_on_mixed_corpus():
         _fast_regex,
         _parse_batch,
         _plain_fields,
-        _slow_frame,
+        _slow_cols,
     )
     from pysyslog.parser_core import SyslogParser
 
@@ -217,8 +217,24 @@ def test_fast_path_equals_slow_on_mixed_corpus():
         # offset minutes of 60+ carry into the hour in the state machine
         "2024-06-01T12:00:00-05:90 host app: offset minutes 90",
         "2024-06-01T12:00:00+01:60 host app: offset minutes 60",
-        None,
+        # a zero BSD fraction renders no fraction at all; an inferred
+        # Feb 29 in the future of a leap-year `now` keeps that year
+        # (the previous year has no Feb 29)
+        "Jun  1 12:00:00.000 host1 app: bsd all-zero frac",
+        "Feb 29 12:00:00 host1 app: inferred leap day",
     ]
+    # the one datetime derivation's envelope edges: a minus-zero offset
+    # is UTC, year 0000 and a non-leap explicit Feb 29 take the
+    # now-fallback, and an inferred date more than a day past `now`
+    # (2018-12-01) is dated the previous year
+    edges = [
+        "2018-06-01T12:34:56-00:00 host1 app: iso minus-zero offset",
+        "0000-06-01T12:34:56Z host1 app: iso year zero",
+        "2016 Feb 29 12:00:00 host1 app: explicit leap day",
+        "2018 Feb 29 12:00:00 host1 app: explicit non-leap feb 29",
+        "Dec 31 23:59:59 host1 app: inferred future date",
+    ]
+    lines += edges + [None]
     plain = _plain_fields(FIELD_NAMES)
     option_sets = [
         ParserOptions(now_epoch=GEN_NOW_EPOCH),
@@ -241,6 +257,9 @@ def test_fast_path_equals_slow_on_mixed_corpus():
         ParserOptions(now_epoch=GEN_NOW_EPOCH, default_tz="Europe/Warsaw"),
         ParserOptions(now_epoch=GEN_NOW_EPOCH,
                       time_format="%Y-%m-%d %H:%M:%S%z"),
+        # `now` early in a leap year: most inferred dates are in the
+        # future and take the previous-year rule
+        ParserOptions(now_epoch=1454284800.0),  # 2016-02-01
     ]
     raw = pd.Series(lines, dtype=object)
     for opts in option_sets:
@@ -248,8 +267,8 @@ def test_fast_path_equals_slow_on_mixed_corpus():
         assert fast_re is not None
         got = _parse_batch(SyslogParser(opts), raw, opts, FIELD_NAMES,
                            plain, False, fast_re)
-        want = _slow_frame(SyslogParser(opts), raw, FIELD_NAMES, plain,
-                           False)
+        want = _parse_batch(SyslogParser(opts), raw, opts, FIELD_NAMES,
+                            plain, False)
         def _n(v):
             # None and NaN are both Arrow nulls; ints may ride as floats
             if v is None or (isinstance(v, float) and v != v):
@@ -263,6 +282,25 @@ def test_fast_path_equals_slow_on_mixed_corpus():
             w = [_n(v) for v in want[f].tolist()]
             assert g == w, (opts, f, [(i, a, b) for i, (a, b) in
                                       enumerate(zip(g, w)) if a != b][:3])
+        # a batch with no fast rows (empty, or only state-machine
+        # shapes) is the state machine's own column lists, as objects
+        for batch in ([], ["no date at all", " whitespace-led",
+                           "<13>host1 app: no date here", None]):
+            out = _parse_batch(SyslogParser(opts),
+                               pd.Series(batch, dtype=object), opts,
+                               FIELD_NAMES, plain, False, fast_re)
+            ref = _slow_cols(SyslogParser(opts), batch, FIELD_NAMES, plain,
+                             False)
+            assert list(out.columns) == FIELD_NAMES
+            assert (out.dtypes == object).all()
+            assert {f: out[f].tolist() for f in FIELD_NAMES} == ref
+    # the envelope edges reach the fast path's datetime derivation
+    opts = option_sets[0]
+    assert all(_fast_regex(opts).match(s) for s in edges)
+    got = _parse_batch(SyslogParser(opts), pd.Series(edges, dtype=object),
+                       opts, FIELD_NAMES, plain, False, _fast_regex(opts))
+    assert got["date"].tolist()[2:] == ["2016-02-29", "2018-12-01",
+                                        "2017-12-31"]
     # the cohort must actually engage for the default option set (the
     # detection-enabled sets legitimately exclude '='/'{' content)
     mask = raw.str.extract(_fast_regex(option_sets[0]))["prog"].notna()

@@ -15,7 +15,6 @@ from pysyslog.parser import (
     _fast_regex,
     _parse_batch,
     _plain_fields,
-    _slow_frame,
 )
 
 P = SyslogParser(
@@ -84,7 +83,8 @@ def _assert_fast_equals_slow(lines, opts):
     plain = _plain_fields(FIELD_NAMES)
     got = _parse_batch(SyslogParser(opts), raw, opts, FIELD_NAMES, plain,
                        False, _fast_regex(opts))
-    want = _slow_frame(SyslogParser(opts), raw, FIELD_NAMES, plain, False)
+    want = _parse_batch(SyslogParser(opts), raw, opts, FIELD_NAMES, plain,
+                        False)
 
     def _n(v):
         if v is None or (isinstance(v, float) and v != v):

@@ -1,7 +1,7 @@
 """Per-sink adaptive salting in route_by_facility_severity (guide §2.5
 hot keys / §6 small files): a hot sink splits across multiple write
 tasks (several files), small sinks keep one file, and the routed rows
-are identical to an unsalted write.  Below the row floor (or on an
+are exactly the input's rows.  Below the row floor (or on an
 unpersisted input) every sink is one file.  Local sinks are written
 without checksum sidecars, without touching the session conf and
 without forking `chmod`; without the no-fork class they fall back to
@@ -53,7 +53,11 @@ def _files(path):
 
 
 def _rows(spark, out):
-    frame = spark.read.parquet(os.path.join(out, "by_facility_severity"))
+    return _frame_rows(
+        spark.read.parquet(os.path.join(out, "by_facility_severity")))
+
+
+def _frame_rows(frame):
     return {
         r["doc_id"]: (r["facility_name"], r["severity_name"], r["payload"])
         for r in frame.collect()
@@ -87,8 +91,7 @@ def test_adaptive_salt_splits_hot_sink_only(spark, skewed, tmp_path,
     monkeypatch.setattr(route, "MIN_SALT_ROWS", 100)
     df = df.persist()
     try:
-        files = _route_uncoalesced(spark, df, out, rows_hint=total,
-                                   max_records_per_file=1_000_000)
+        files = _route_uncoalesced(spark, df, out, rows_hint=total)
     finally:
         df.unpersist()
     # hot sink: salt width ceil(2000/target) > 1 spreads it over
@@ -97,11 +100,9 @@ def test_adaptive_salt_splits_hot_sink_only(spark, skewed, tmp_path,
     assert files["facility_name=mail/severity_name=info"] == 1
     assert files["facility_name=ftp/severity_name=info"] == 1
 
-    # routed-row equality vs the legacy uniform-salt write
-    out2 = str(tmp_path / "uniform")
-    route_by_facility_severity(df, out2, files_per_sink=1)
+    # the routed rows are exactly the input's rows
     rows = _rows(spark, out)
-    assert rows == _rows(spark, out2)
+    assert rows == _frame_rows(df)
     assert len(rows) == total
 
 
@@ -113,9 +114,7 @@ def test_below_floor_writes_one_file_per_sink(spark, skewed, tmp_path):
     files = _route_uncoalesced(spark, df, out, rows_hint=total)
     assert len(files) == 3
     assert set(files.values()) == {1}
-    out2 = str(tmp_path / "uniform")
-    route_by_facility_severity(df, out2, files_per_sink=1)
-    assert _rows(spark, out) == _rows(spark, out2)
+    assert _rows(spark, out) == _frame_rows(df)
 
 
 def test_unpersisted_input_skips_sizing_with_warning(spark, skewed, tmp_path,
