@@ -355,11 +355,7 @@ def pipeline_run(spark, n_rows: int, out_dir: str, warmup: bool = True,
     parallelism levels.  The sandbox's identical-run variance is up to
     2x (BASELINE.md), so single-shot numbers are not defensible —
     median-of-N is."""
-    from pysyslog.aggregate import (
-        hourly_facility_severity_counts,
-        pipeline_counts,
-        salted_counts,
-    )
+    from pysyslog.aggregate import pipeline_counts, salted_counts
     from pysyslog.gen import GEN_NOW_EPOCH, gen_tokens_df
     from pysyslog.options import ParserOptions
     from pysyslog.pipeline import transform
@@ -400,8 +396,13 @@ def pipeline_run(spark, n_rows: int, out_dir: str, warmup: bool = True,
         w.count()
         route_by_facility_severity(w, os.path.join(out_dir, "warmup"),
                                    rows_hint=n_rows)
-        hourly_facility_severity_counts(w).count()
+        # the aggregates one_pass times, in its order
+        base, hourly, sinks = pipeline_counts(w)
+        base = base.persist()
+        hourly.count()
+        sinks.count()
         salted_counts(w, "host").count()
+        base.unpersist()
         w.unpersist()
 
     def one_pass():

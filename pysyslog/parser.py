@@ -23,9 +23,10 @@ from json.encoder import encode_basestring as _json_str
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     IntegerType,
     LongType,
     MapType,
@@ -799,9 +800,15 @@ def _plain_fields(field_names) -> list[str]:
             and f not in ("epoch_us", "sdata", "sdata_json", "parsed_json")]
 
 
-def make_parse_udf(options: ParserOptions, emit_parsed_json: bool = False):
+def _parse_udf(options: ParserOptions, tokens: bool, emit_parsed_json: bool):
     """Build the Arrow-batched parse UDF (options captured by closure;
-    must have a pinned now_epoch for deterministic retries)."""
+    must have a pinned now_epoch for deterministic retries).
+
+    `tokens` input (array<int32> of UTF-8 bytes) is decoded inside the
+    same UDF: one Python/Arrow boundary instead of two back-to-back
+    ArrowEvalPython nodes.  Its struct carries the decoded line as
+    `raw` and has no `message_raw`, which would cross the boundary as
+    a second copy of `raw` (or a null under prune_raw)."""
     from pyspark.sql.functions import pandas_udf
 
     if options.now_epoch is None:
@@ -810,67 +817,32 @@ def make_parse_udf(options: ParserOptions, emit_parsed_json: bool = False):
             "(wall-clock reads inside tasks break retry determinism)"
         )
 
-    plain_fields = _plain_fields(FIELD_NAMES)
+    field_names, schema = FIELD_NAMES, SYSLOG_SCHEMA
+    if tokens:
+        field_names = [f for f in FIELD_NAMES if f != "message_raw"]
+        schema = StructType(
+            [f for f in SYSLOG_SCHEMA.fields if f.name != "message_raw"]
+            + [StructField("raw", StringType())]
+        )
+    plain_fields = _plain_fields(field_names)
     fast_re = None if emit_parsed_json else _fast_regex(options)
 
-    @pandas_udf(SYSLOG_SCHEMA)
-    def parse_udf(raw: pd.Series) -> pd.DataFrame:
+    @pandas_udf(schema)
+    def parse_udf(col: pd.Series) -> pd.DataFrame:
         parser = _get_parser(options)
-        return _parse_batch(parser, raw, options, FIELD_NAMES, plain_fields,
-                            emit_parsed_json, fast_re)
+        raw = decode_tokens(col) if tokens else col
+        out = _parse_batch(parser, raw, options, field_names, plain_fields,
+                           emit_parsed_json, fast_re)
+        if tokens:
+            out["raw"] = raw
+        return out
 
     return parse_udf
 
 
-def make_parse_tokens_udf(options: ParserOptions):
-    """Fused detokenize+parse UDF: tokens array<int32> -> parsed struct
-    with the decoded line as `raw`.  One Python/Arrow boundary instead
-    of two back-to-back ArrowEvalPython nodes — at 10^12 rows the second
-    crossing is pure waste.  The struct has no `message_raw`: it would
-    cross the boundary as a second copy of `raw` (or a null under
-    prune_raw)."""
-    from pyspark.sql.functions import pandas_udf
-
-    if options.now_epoch is None:
-        raise ValueError("options.now_epoch must be pinned (see make_parse_udf)")
-
-    field_names = [f for f in FIELD_NAMES if f != "message_raw"]
-    schema = StructType(
-        [f for f in SYSLOG_SCHEMA.fields if f.name != "message_raw"]
-        + [StructField("raw", StringType())]
-    )
-    plain_fields = _plain_fields(field_names)
-    fast_re = _fast_regex(options)
-
-    @pandas_udf(schema)
-    def parse_tokens_udf(tokens: pd.Series) -> pd.DataFrame:
-        parser = _get_parser(options)
-        raw = decode_tokens(tokens)
-        out = _parse_batch(parser, raw, options, field_names, plain_fields,
-                           False, fast_re)
-        out["raw"] = raw
-        return out
-
-    return parse_tokens_udf
-
-
-def parse_syslog_tokens(
-    df: DataFrame,
-    tokens_col: str = "tokens",
-    options: ParserOptions | None = None,
-) -> DataFrame:
-    """Fused scan-side operator: detokenize+parse in one Arrow crossing,
-    flattened, with the JVM-derived ts column (like parse_syslog)."""
-    options = options or ParserOptions()
-    udf = make_parse_tokens_udf(options)
-    out = df.withColumn("syslog", udf(F.col(tokens_col)))
-    out = out.select(*df.columns, "syslog.*")
-    return out.withColumn("ts", F.timestamp_micros(F.col("epoch_us")))
-
-
 def parse_syslog(
     df: DataFrame,
-    raw_col: str | Column = "raw",
+    raw_col: str = "raw",
     options: ParserOptions | None = None,
     emit_parsed_json: bool = False,
 ) -> DataFrame:
@@ -878,11 +850,19 @@ def parse_syslog(
     a JVM-derived `ts` timestamp (from epoch_us; stays in whole-stage
     codegen for all downstream windowing).
 
+    `raw_col` holds either the line (string) or its token array
+    (array<int32>, decoded in the same Arrow crossing; the decoded line
+    is added as `raw` in place of `message_raw`).
+
     ⇔ parse_syslog_line applied column-wise (Line.pm:704-1014).
     """
     options = options or ParserOptions()
-    udf = make_parse_udf(options, emit_parsed_json)
-    col = F.col(raw_col) if isinstance(raw_col, str) else raw_col
-    out = df.withColumn("syslog", udf(col))
+    tokens = isinstance(df.schema[raw_col].dataType, ArrayType)
+    udf = _parse_udf(options, tokens, emit_parsed_json)
+    out = df.withColumn("syslog", udf(F.col(raw_col)))
     out = out.select(*df.columns, "syslog.*")
     return out.withColumn("ts", F.timestamp_micros(F.col("epoch_us")))
+
+
+# perfbench still imports the token operator under this name
+parse_syslog_tokens = parse_syslog

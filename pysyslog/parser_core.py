@@ -393,6 +393,23 @@ def _compile_tm_format(fmt: str):
     return render
 
 
+def _custom_formatter(render):
+    """fn(epoch_ns, offset_min) for a non-default
+    $TimeMomentFormatString (Line.pm:814-816): the compiled `render`
+    at that offset, then the reference's s/\\+00:?00$/Z/ rewrite."""
+
+    def fmt(epoch_ns: int, offset_min: int) -> str:
+        sec, frac_ns = divmod(epoch_ns, NS)
+        days, sod = divmod(sec + offset_min * 60, 86400)
+        y, mo, d = _civil_from_days(days)
+        h, rem = divmod(sod, 3600)
+        mi, s = divmod(rem, 60)
+        return RE_UTC_SUFFIX.sub(
+            "Z", render(y, mo, d, h, mi, s, frac_ns, offset_min, sec))
+
+    return fmt
+
+
 _DEFAULT_TIME_FORMAT = "%FT%T%f%z"
 
 _DAYS_IN_MONTH = (31, 28, 31, 30, 31, 30, 31, 31, 30, 31, 30, 31)
@@ -480,6 +497,9 @@ class SyslogParser:
             if self.opts.time_format == _DEFAULT_TIME_FORMAT
             else _compile_tm_format(self.opts.time_format)
         )
+        # the one formatter fn(epoch_ns, offset_min) -> rendered string
+        self._fmt = (self._fmt_iso if self._tm_render is None
+                     else _custom_formatter(self._tm_render))
         # datetime render memo: every derived field (epoch, the three
         # rendered strings, tz, date, time) is a pure function of
         # datetime_raw given (options, now) — both fixed for this
@@ -491,53 +511,27 @@ class SyslogParser:
 
     def _render_datetime(self, msg: dict, epoch_ns: int, offset_min: int):
         """⇔ Line.pm:812-817: epoch (%s%f), datetime_utc/local/str
-        (%FT%T%f%z with +0000→Z rewrite), tz (%z with +0000→Z).
+        (the time format, %FT%T%f%z by default, with +0000→Z rewrite),
+        tz (%z with +0000→Z).
 
-        The +0000→Z rewrite is folded into the formatter (an offset of
-        exactly 0 is the only case the regexes can hit), and identical
-        offsets share one rendered string — in the common case (UTC
-        default tz, offset-less message) all three fields are the same
-        string, built once.
+        The default formatter (_fmt_iso) folds the +0000→Z rewrite in
+        (an offset of exactly 0 is the only case the regexes can hit),
+        and identical offsets share one rendered string — in the common
+        case (UTC default tz, offset-less message) all three fields are
+        the same string, built once.
         """
         sec, frac_ns = divmod(epoch_ns, NS)
         msg["epoch"] = f"{sec}{_frac_str(frac_ns)}" if frac_ns else str(sec)
-        if self._tm_render is not None:
-            return self._render_datetime_custom(msg, sec, frac_ns, offset_min)
-        utc = self._fmt_iso(epoch_ns, 0)
+        fmt = self._fmt
+        utc = fmt(epoch_ns, 0)
         msg["datetime_utc"] = utc
         lo = self.local_offset_min
-        local = utc if lo == 0 else self._fmt_iso(epoch_ns, lo)
+        local = utc if lo == 0 else fmt(epoch_ns, lo)
         msg["datetime_local"] = local
         msg["datetime_str"] = (
             utc if offset_min == 0
             else local if offset_min == lo
-            else self._fmt_iso(epoch_ns, offset_min)
-        )
-        msg["tz"] = "Z" if offset_min == 0 else _off_str(offset_min)
-
-    def _render_datetime_custom(self, msg, sec, frac_ns, offset_min):
-        """Non-default $TimeMomentFormatString path (Line.pm:814-816):
-        render each of utc/local/str with the compiled format, then
-        apply the reference's s/\\+00:?00$/Z/ rewrite."""
-        render = self._tm_render
-
-        def fmt(off):
-            shifted = sec + off * 60
-            days, sod = divmod(shifted, 86400)
-            y, mo, d = _civil_from_days(days)
-            h, rem = divmod(sod, 3600)
-            mi, s = divmod(rem, 60)
-            return RE_UTC_SUFFIX.sub("Z", render(y, mo, d, h, mi, s, frac_ns, off, sec))
-
-        utc = fmt(0)
-        msg["datetime_utc"] = utc
-        lo = self.local_offset_min
-        local = utc if lo == 0 else fmt(lo)
-        msg["datetime_local"] = local
-        msg["datetime_str"] = (
-            utc if offset_min == 0
-            else local if offset_min == lo
-            else fmt(offset_min)
+            else fmt(epoch_ns, offset_min)
         )
         msg["tz"] = "Z" if offset_min == 0 else _off_str(offset_min)
 

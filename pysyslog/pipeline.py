@@ -27,10 +27,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .aggregate import pipeline_counts
 from .enrich import enrich
+from .iceberg import write_partitioned
 from .options import ParserOptions
 from .parser import parse_syslog
 from .route import route_by_facility_severity
-from .tokens import detokenize, roundtrip_violations
+from .tokens import roundtrip_violations
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -58,8 +59,6 @@ def transform(tokens_df: DataFrame, options: ParserOptions) -> DataFrame:
     (detokenize+parse fused into one Arrow crossing) → enrich, without
     the `tokens` input column (`raw` carries the line).  Writes no data,
     but sets the two session settings below."""
-    from .parser import parse_syslog_tokens
-
     # Callers persist the frame this returns (bench stage 1, run_pipeline
     # per bucket).  Columnar-cache compression is a bad trade for it:
     # the wide columns are near-unique strings (raw, message, content,
@@ -80,7 +79,7 @@ def transform(tokens_df: DataFrame, options: ParserOptions) -> DataFrame:
     # Scale-safe: it only changes the in-task partial-agg data
     # structure, not the plan.
     conf.set("spark.sql.codegen.aggregate.map.vectorized.enable", "true")
-    parsed = parse_syslog_tokens(tokens_df, "tokens", options)
+    parsed = parse_syslog(tokens_df, "tokens", options)
     return enrich(parsed.drop("tokens"))
 
 
@@ -104,10 +103,11 @@ def run_pipeline(
         part = tokens_df.filter(bucket_col == b)
         enriched = transform(part.repartition(parallelism * 2), options).persist()
 
+        # a JVM scan of the tokens column; rows that cannot decode fail
+        # the parse UDF instead
         m: dict = {
             "bucket": b,
-            "roundtrip_violations":
-                roundtrip_violations(detokenize(part)).count(),
+            "roundtrip_violations": roundtrip_violations(part).count(),
         }
 
         # one job for both manifest counts
@@ -122,12 +122,10 @@ def run_pipeline(
         # per-sink totals (pipeline_counts) instead of two input scans
         base, hourly, sinks = pipeline_counts(enriched)
         base = base.persist()
-        hourly.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"bucket={b}", "agg_hourly")
-        )
-        sinks.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"bucket={b}", "sink_counts")
-        )
+        write_partitioned(
+            hourly, os.path.join(out_dir, f"bucket={b}", "agg_hourly"), [])
+        write_partitioned(
+            sinks, os.path.join(out_dir, f"bucket={b}", "sink_counts"), [])
         base.unpersist()
         enriched.unpersist()
 

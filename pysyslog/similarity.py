@@ -181,27 +181,6 @@ def _plane(dim: int, p: int, seed: int = 42):
     return (x.astype(np.float64) / 2**63) - 1.0
 
 
-def signature_udf(dim: int, n_planes: int = 12, seed: int = 42):
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import IntegerType
-
-    planes = np.stack([_plane(dim, p, seed) for p in range(n_planes)])  # (b, d)
-
-    @pandas_udf(IntegerType())
-    def sig(vecs: pd.Series) -> pd.Series:
-        # float64 projections: float32 storage upcasts exactly, keeping
-        # the sign decision reproducible across engines
-        mat = np.stack(vecs.to_numpy()).astype(np.float64)  # (n, d)
-        bits = (mat @ planes.T) > 0  # (n, b)
-        out = np.zeros(len(mat), dtype=np.int64)
-        for i in range(planes.shape[0]):
-            out |= bits[:, i].astype(np.int64) << i
-        return pd.Series(out.astype("int32"))
-
-    return sig
-
-
 def lsh_topk(
     corpus: DataFrame, queries: DataFrame, k: int = 5, dim: int = 64,
     n_planes: int = 10, id_col: str = "vec_id", vec_col: str = "embedding",
@@ -209,9 +188,10 @@ def lsh_topk(
 ) -> DataFrame:
     """Approximate top-k: signature-bucket candidates (query probes its
     own bucket plus all 1-bit-flip neighbors), exact cosine re-rank."""
-    sig = signature_udf(dim, n_planes)
-    c = corpus.withColumn("__sig", sig(F.col(vec_col)))
-    q = queries.withColumn("__sig", sig(F.col(vec_col)))
+    # one band of n_planes bits: the whole signature
+    sig = banded_signature_udf(dim, 1, n_planes)
+    c = corpus.withColumn("__sig", sig(F.col(vec_col))[0])
+    q = queries.withColumn("__sig", sig(F.col(vec_col))[0])
     probes = F.array(
         F.col("__sig"), *[
             F.col("__sig").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)
@@ -300,7 +280,7 @@ def banded_signature_udf(dim: int, n_bands: int, rows_per_band: int,
                          seed: int = 42):
     """Array of per-band random-hyperplane signatures: band b packs the
     sign bits of planes [b*r, (b+1)*r) into one int.  Planes are the
-    same deterministic hash-derived family as signature_udf, indexed
+    deterministic hash-derived family of `_plane`, indexed
     globally, so the oracle SQL can replay any (band, bit) exactly."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
@@ -324,6 +304,8 @@ def banded_signature_udf(dim: int, n_bands: int, rows_per_band: int,
 
     @pandas_udf(ArrayType(IntegerType()))
     def sigs(vecs: pd.Series) -> pd.Series:
+        # float64 projections: float32 storage upcasts exactly, keeping
+        # the sign decision reproducible across engines
         mat = np.stack(vecs.to_numpy()).astype(np.float64)  # (n, d)
         bits = (mat @ planes.T) > 0  # (n, n_bands*r)
         weights = 1 << np.arange(r, dtype=np.int64)

@@ -208,6 +208,29 @@ def test_manifest_counts_undated_rows(spark, tmp_path):
     assert (b["rows_in"], b["parse_no_ts"], b["roundtrip_violations"]) == (3, 2, 0)
 
 
+def test_manifest_counts_out_of_range_token(spark, tmp_path):
+    """A token outside 0-255 breaks the round trip but still decodes
+    (the byte cast wraps 256+'x' to 'x'), so the job runs and the
+    manifest counts it; the aggregate outputs carry no .crc sidecar."""
+    lines = ["May 19 22:03:29 janus sshd[10173]: one",
+             "May 19 22:03:30 janus sshd[10173]: two",
+             "May 19 22:03:31 janus sshd[10173]: three"]
+    toks = [list(s.encode("utf-8")) for s in lines]
+    toks[1][-1] = 256 + ord("x")
+    df = spark.createDataFrame(
+        [(f"d{i}", t, len(t), "t") for i, t in enumerate(toks)],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    out = tmp_path / "sinks"
+    m = run_pipeline(spark, df, str(out), OPTS, n_buckets=1)
+    b = m["buckets"]["0"]
+    assert (b["rows_in"], b["roundtrip_violations"]) == (3, 1)
+    for agg in ("agg_hourly", "sink_counts"):
+        d = out / "bucket=0" / agg
+        assert spark.read.parquet(str(d)).count() > 0
+        assert not [p.name for p in d.rglob("*.crc")], agg
+
+
 def test_iceberg_probe_and_parquet_fallback(spark, tmp_path):
     """No iceberg runtime jar ships in this sandbox: the probe must say
     so (cached per JVM) and the sink writer must fall back to

@@ -116,9 +116,7 @@ def test_tokens_column_prunes_through_udf_projection(spark):
     spark.createDataFrame(
         rows, "doc_id string, tokens array<int>, n_tok int, source string"
     ).write.mode("overwrite").parquet(d)
-    from pysyslog.tokens import detokenize
-
-    df = detokenize(spark.read.parquet(d))
-    out = parse_syslog(df, "raw", OPTS).select("program_name")
+    df = spark.read.parquet(d)
+    out = parse_syslog(df, "tokens", OPTS).select("program_name")
     plan = _plan(out)
     assert "n_tok" not in plan.split("ReadSchema")[-1], plan
