@@ -78,9 +78,9 @@ def pipeline_counts(enriched: DataFrame):
     return base, hourly, sinks
 
 
-def salted_counts(df: DataFrame, key_col: str, out_col: str = "n") -> DataFrame:
+def salted_counts(df: DataFrame, key_col: str) -> DataFrame:
     """Count-by-key for Zipf-skewed keys: one groupBy, whose partial
     count turns a hot key into at most one row per map partition before
     the only shuffle (see the module docstring).  perfbench imports it
     and names a span after it, so the name stays."""
-    return df.groupBy(key_col).agg(F.count(F.lit(1)).alias(out_col))
+    return df.groupBy(key_col).agg(F.count(F.lit(1)).alias("n"))

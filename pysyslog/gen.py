@@ -19,6 +19,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .tables import MONTH_ABBR
+
 TEMPLATE_SOURCES = [
     "bsd_sshd",        # BSD date, program[pid]
     "bsd_cron",        # path program, no host domain
@@ -37,8 +39,6 @@ TEMPLATE_WEIGHTS = [30, 10, 12, 14, 6, 8, 8, 4, 4, 4]
 _PROGRAMS = ["sshd", "crond", "nginx", "kernel", "systemd", "postfix/smtpd",
              "dockerd", "etcd", "chronyd", "auditd"]
 _USERS = ["alice", "bob", "carol", "dave", "erin", "frank"]
-_MONTH = ["Jan", "Feb", "Mar", "Apr", "May", "Jun",
-          "Jul", "Aug", "Sep", "Oct", "Nov", "Dec"]
 
 # Pinned "now" for the whole synthetic universe: all generated dates are
 # in 2018 so BSD year-inference resolves to 2018 deterministically.
@@ -115,7 +115,7 @@ def synth_lines(ids: np.ndarray, seed: int = 42) -> tuple[list[str], list[str]]:
         d = int(days[i])
         mon_i = d // 30  # 0..3 -> Jun..Sep
         dom = d % 28 + 1  # always a valid day-of-month
-        mon = _MONTH[5 + mon_i]
+        mon = MONTH_ABBR[5 + mon_i]
         hh, rem = divmod(int(secs[i]), 3600)
         mm, ss = divmod(rem, 60)
         bsd = f"{mon} {dom:2d} {hh:02d}:{mm:02d}:{ss:02d}"

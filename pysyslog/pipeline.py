@@ -7,10 +7,10 @@ aggregate, with per-partition lineage, metrics, and checkpoint/resume.
   hash; each bucket is an independent, idempotent unit of work
   (sandbox proxy for Iceberg snapshot/partition-level commits);
 * a JSON manifest records completed buckets + per-bucket metrics
-  (rows in, parse failures, token round-trip violations, rows routed) —
+  (`rows_in`, `parse_no_ts`, `roundtrip_violations`, `seconds`) —
   rerunning skips completed buckets (resume-from-checkpoint);
-* explicit `repartition` before the parse stage so the Arrow UDF
-  saturates all cores regardless of input file layout;
+* no shuffle before the parse: the parse runs on the scan's own split,
+  and the round-trip count is a metric observed on that scan;
 * AQE left on for shuffle coalescing / skew splitting.
 
 Run via spark-submit:  spark-submit --py-files pysyslog.zip -m pysyslog.pipeline ...
@@ -23,7 +23,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .aggregate import pipeline_counts
 from .enrich import enrich
@@ -31,7 +31,7 @@ from .iceberg import write_partitioned
 from .options import ParserOptions
 from .parser import parse_syslog
 from .route import route_by_facility_severity
-from .tokens import roundtrip_violations
+from .tokens import roundtrip_violation
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -92,7 +92,6 @@ def run_pipeline(
 ) -> dict:
     """Bucketed, resumable batch run. Returns the manifest."""
     manifest = load_manifest(out_dir)
-    parallelism = spark.sparkContext.defaultParallelism
 
     bucket_col = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))
     for b in range(n_buckets):
@@ -100,20 +99,20 @@ def run_pipeline(
         if manifest["buckets"].get(key, {}).get("status") == "done":
             continue
         t0 = time.time()
-        part = tokens_df.filter(bucket_col == b)
-        enriched = transform(part.repartition(parallelism * 2), options).persist()
+        # the round-trip count rides on the scan that builds the cache;
+        # rows that cannot decode fail the parse UDF instead
+        seen = Observation()
+        part = tokens_df.filter(bucket_col == b).observe(seen, F.count_if(
+            roundtrip_violation("tokens")).alias("roundtrip_violations"))
+        enriched = transform(part, options).persist()
 
-        # a JVM scan of the tokens column; rows that cannot decode fail
-        # the parse UDF instead
-        m: dict = {
-            "bucket": b,
-            "roundtrip_violations": roundtrip_violations(part).count(),
-        }
-
-        # one job for both manifest counts
+        # one job builds the cache and yields both counts; the observed
+        # round-trip count is complete when it ends
+        m: dict = {"bucket": b}
         m["rows_in"], m["parse_no_ts"] = enriched.agg(
             F.count(F.lit(1)), F.count_if(F.col("ts").isNull())
         ).first()
+        m.update(seen.get)
         route_by_facility_severity(
             enriched, os.path.join(out_dir, f"bucket={b}"),
             rows_hint=m["rows_in"],

@@ -58,12 +58,11 @@ INT_FACILITY = {
 PRIORITY_NAMES = {v: k for k, v in INT_PRIORITY.items()}
 FACILITY_NAMES = {v: k for k, v in INT_FACILITY.items()}
 
-# Two-way maps with *string* keys, matching Perl hash-key stringification
+# Two-way map with *string* keys, matching Perl hash-key stringification
 # of `%LOG_PRIORITY = (%INT_PRIORITY, reverse %INT_PRIORITY)`
 # (Line.pm:135-143).  Used by the NetApp level-fill quirk (Line.pm:904-906)
 # where the looked-up value may be an int (name key) or a name (int key).
 LOG_PRIORITY_ANY = {**INT_PRIORITY, **{str(v): k for k, v in INT_PRIORITY.items()}}
-LOG_FACILITY_ANY = {**INT_FACILITY, **{str(v): k for k, v in INT_FACILITY.items()}}
 
 PRIORITY_MASK = 0x07
 FACILITY_MASK = 0x03F8

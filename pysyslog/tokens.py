@@ -3,7 +3,8 @@
 The pipeline input is an Iceberg/parquet table of pre-tokenized lines:
 (doc_id string, tokens array<int32>, n_tok int32, source string) where
 tokens are the UTF-8 byte values of the raw syslog line.  The per-row
-invariant is exact round-trip equality: retokenize(detokenize(t)) == t.
+invariant is exact round-trip equality: the tokens decode to a line
+whose UTF-8 encoding is the tokens again.
 
 `decode_tokens` is the one token decoder; the parse UDF
 (pysyslog.parser) calls it on token input.
@@ -27,9 +28,10 @@ def decode_tokens(tokens: pd.Series) -> pd.Series:
     )
 
 
-def roundtrip_violations(df, tokens_col: str = "tokens"):
-    """DataFrame of rows violating the token-array equality invariant,
-    as a JVM predicate over the tokens column (no Python crossing).
+def roundtrip_violation(tokens):
+    """Column: true where a row breaks the token-array equality
+    invariant, a JVM predicate over the tokens column (no Python
+    crossing).
 
     Under strict UTF-8, a byte string that decodes encodes back to the
     same bytes, so the round trip can only fail where the array is not
@@ -38,5 +40,4 @@ def roundtrip_violations(df, tokens_col: str = "tokens"):
     the parse UDF's strict `decode_tokens` fails the job on that row,
     so it never reaches a manifest.  A null array decodes to a null
     line and back, so it is no violation."""
-    return df.filter(F.exists(
-        tokens_col, lambda t: t.isNull() | (t < 0) | (t > 255)))
+    return F.exists(tokens, lambda t: t.isNull() | (t < 0) | (t > 255))

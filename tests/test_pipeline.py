@@ -176,6 +176,8 @@ def test_routed_row_equality_and_resume(spark, corpus, tmp_path):
     routed = spark.read.parquet(out + "/bucket=0/by_facility_severity").unionByName(
         spark.read.parquet(out + "/bucket=1/by_facility_severity")
     )
+    # the sinks hold transform's columns and nothing the run added
+    assert sorted(routed.columns) == sorted(transform(corpus, OPTS).columns)
     got = {
         r["doc_id"]: (r["facility_name"], r["severity_name"], r["raw"])
         for r in routed.select("doc_id", "facility_name", "severity_name", "raw").collect()
@@ -229,6 +231,46 @@ def test_manifest_counts_out_of_range_token(spark, tmp_path):
         d = out / "bucket=0" / agg
         assert spark.read.parquet(str(d)).count() > 0
         assert not [p.name for p in d.rglob("*.crc")], agg
+
+
+def test_bucket_parses_its_scan_and_observes_violations(
+        spark, tmp_path, monkeypatch):
+    """Each bucket persists transform's frame over its own scan split:
+    no shuffle anywhere in that plan but the enrich broadcasts.  The
+    round-trip count is observed on the scan, also for an empty
+    bucket."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from pysyslog import pipeline
+
+    ids = spark.createDataFrame([(f"d{i}",) for i in range(64)], "doc_id string")
+    same = [r["doc_id"] for r in ids.filter(
+        F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0).limit(3).collect()]
+    toks = [list(f"May 19 22:03:2{i} janus sshd[1]: row {i}".encode())
+            for i in range(3)]
+    toks[0][-1] = 256 + toks[0][-1]
+    df = spark.createDataFrame(
+        [(d, t, len(t), "t") for d, t in zip(same, toks)],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    persisted = []
+
+    def capture(*args):
+        persisted.append(transform(*args))
+        return persisted[-1]
+
+    monkeypatch.setattr(pipeline, "transform", capture)
+    m = run_pipeline(spark, df, str(tmp_path / "sinks"), OPTS, n_buckets=2)
+    got = {k: (b["rows_in"], b["roundtrip_violations"])
+           for k, b in m["buckets"].items()}
+    assert got == {"0": (3, 1), "1": (0, 0)}
+    assert m["metrics"]["total_rows"] == 3
+    assert len(persisted) == 2
+    for frame in persisted:
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert set(re.findall(r"\w*Exchange\b", plan)) <= {"BroadcastExchange"}, plan
 
 
 def test_iceberg_probe_and_parquet_fallback(spark, tmp_path):

@@ -10,7 +10,7 @@ import pytest
 from pysyslog.gen import GEN_NOW_EPOCH
 from pysyslog.options import ParserOptions
 from pysyslog.parser import parse_syslog
-from pysyslog.tokens import decode_tokens, roundtrip_violations
+from pysyslog.tokens import decode_tokens, roundtrip_violation
 
 SCHEMA = "doc_id string, tokens array<int>"
 
@@ -33,7 +33,7 @@ def test_detokenize_and_roundtrip(spark):
     assert "message_raw" not in out.columns
     got = [r["raw"] for r in out.orderBy("doc_id").collect()]
     assert got == lines
-    assert roundtrip_violations(df).count() == 0
+    assert df.filter(roundtrip_violation("tokens")).count() == 0
 
 
 def test_roundtrip_catches_corruption(spark):
@@ -43,7 +43,8 @@ def test_roundtrip_catches_corruption(spark):
          ("d2", _tok("abc"))],
         SCHEMA,
     )
-    got = sorted(r["doc_id"] for r in roundtrip_violations(df).collect())
+    got = sorted(r["doc_id"]
+                 for r in df.filter(roundtrip_violation("tokens")).collect())
     assert got == ["d0", "d1"]
 
 
@@ -71,7 +72,7 @@ def _py_decode(t):
 ])
 def test_roundtrip_predicate_edge_cases(spark, tokens, violations):
     df = spark.createDataFrame([("d0", tokens)], SCHEMA)
-    bad = roundtrip_violations(df)
+    bad = df.filter(roundtrip_violation("tokens"))
     assert bad.count() == violations
     plan = bad._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
