@@ -3,10 +3,11 @@
 Scale notes (these run over 100 TB document sets):
 * exact dedup is a single hash-shuffle on a 32-byte digest — the
   minimal possible exact plan;
-* MinHash signatures are computed with ONE shuffle (explode shingles →
-  groupBy doc → k mins as independent aggregates); LSH banding turns
-  the O(n²) pair space into per-bucket joins, and every join key is a
-  digest (uniform, no skew);
+* MinHash signatures are one Arrow-batched UDF per document, zero
+  shuffle (all k mins in one pass over the document's shingle set);
+* LSH banding turns the O(n²) pair space into per-bucket joins, all
+  through `band_pairs`, one self-join per near-dup operator; every
+  MinHash join key is a digest (uniform, no skew);
 * digests use md5 (JVM-side, also available in DuckDB) so the oracle
   can replay the exact same signatures;
 * SimHash is an Arrow-batched pandas UDF (bit-twiddling is cheaper in
@@ -15,13 +16,13 @@ Scale notes (these run over 100 TB document sets):
 
 from __future__ import annotations
 
+import re as _re_py
+
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 NORM = lambda c: F.regexp_replace(F.trim(F.lower(c)), r"\s+", " ")  # noqa: E731
-
-import re as _re_py
 
 _RE_WS_PY = _re_py.compile(r"\s+")
 
@@ -122,6 +123,33 @@ def minhash_signatures(
     )
 
 
+def band_pairs(df: DataFrame, id_col: str, bands: Column, *carry: str) -> DataFrame:
+    """Banded LSH candidate join: rows whose `bands` arrays (one key per
+    band, over columns of `df`) agree at any band position become one
+    pair (id_a, id_b) with id_a < id_b.  The bands come from ONE
+    projection of `df`, posexploded into (__band, __sig), so a signature
+    UDF behind them runs once per row, not once per band.  Each `carry`
+    column comes through as <c>_a / <c>_b, so verification needs no
+    re-join of the signatures."""
+    s = df.select(
+        F.col(id_col), *carry, F.posexplode(bands).alias("__band", "__sig")
+    )
+
+    def side(x):
+        return s.select(
+            F.col(id_col).alias(f"id_{x}"),
+            *[F.col(c).alias(f"{c}_{x}") for c in carry],
+            "__band", "__sig",
+        )
+
+    return (
+        side("a").join(side("b"), ["__band", "__sig"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+        .drop("__band", "__sig")
+    )
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame, id_col: str = "doc_id",
     bands: int = 4, rows_per_band: int = 4,
@@ -129,34 +157,16 @@ def lsh_candidate_pairs(
     """Banded LSH: docs sharing any band bucket become candidate pairs.
     Output: (id_a, id_b) with id_a < id_b, distinct."""
     sig_cols = [c for c in signatures.columns if c != id_col]
-    assert len(sig_cols) >= bands * rows_per_band
-    band_rows = []
-    for b in range(bands):
-        cols = sig_cols[b * rows_per_band:(b + 1) * rows_per_band]
-        band_rows.append(
-            signatures.select(
-                F.col(id_col),
-                F.lit(b).alias("band"),
-                F.md5(F.concat_ws("|", *cols)).alias("bucket"),
-            )
-        )
-    banded = band_rows[0]
-    for extra in band_rows[1:]:
-        banded = banded.unionByName(extra)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
+    if len(sig_cols) < bands * rows_per_band:
+        # a missing band would key every doc on md5('') and pair them all
+        raise ValueError(
+            f"{bands} bands x {rows_per_band} rows need "
+            f"{bands * rows_per_band} signature columns, got {len(sig_cols)}")
+    keys = F.array(*[
+        F.md5(F.concat_ws("|", *sig_cols[b * rows_per_band:(b + 1) * rows_per_band]))
+        for b in range(bands)
+    ])
+    return band_pairs(signatures, id_col, keys)
 
 
 def jaccard_pairs(
@@ -219,7 +229,9 @@ def simhash_udf(bits: int = 64):
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
-    assert bits <= 64
+    if not 1 <= bits <= 64:
+        raise ValueError(f"bits must be in [1, 64], got {bits}: "
+                         "signatures are signed 64-bit longs")
     shifts = np.arange(bits, dtype=np.uint64)
     cache: dict[str, int] = {}
 
@@ -279,25 +291,13 @@ def simhash_near_dups(df: DataFrame, text_col: str = "text",
     chunks give 65536 buckets per band, keeping the candidate self-join
     linear-ish; narrower chunks concentrate the join onto few keys."""
     simmed = df.select(F.col(id_col), simhash_udf()(F.col(text_col)).alias("sh"))
-    chunks = []
-    for i in range(4):
-        chunk = F.shiftrightunsigned(F.col("sh"), i * 16).bitwiseAND(F.lit(0xFFFF))
-        chunks.append(simmed.select(id_col, F.lit(i).alias("ci"), chunk.alias("cv")))
-    banded = chunks[0]
-    for c in chunks[1:]:
-        banded = banded.unionByName(c)
-    a, b = banded.alias("a"), banded.alias("b")
-    cands = (
-        a.join(b, (F.col("a.ci") == F.col("b.ci")) & (F.col("a.cv") == F.col("b.cv"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    sa = simmed.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a")
-    sb = simmed.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b")
+    chunks = F.array(*[
+        F.shiftrightunsigned(F.col("sh"), i * 16).bitwiseAND(F.lit(0xFFFF))
+        for i in range(4)
+    ])
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     return (
-        cands.join(sa, "id_a").join(sb, "id_b")
+        band_pairs(simmed, id_col, chunks, "sh")
         .select("id_a", "id_b", hamming.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )

@@ -33,6 +33,11 @@ from .options import ParserOptions
 from .parser import parse_syslog
 
 
+# the characters Java's regex \s matches — the rule `_is_start`'s ^\s
+# applies; the streaming reassembly tests line heads against the same set
+CONTINUATION_LEADS = (" ", "\t", "\n", "\x0b", "\f", "\r")
+
+
 def _is_start(line_col: str):
     # any non-whitespace-led line starts a record ⇔ Line.pm:1051-1053
     return (~F.col(line_col).rlike(r"^\s")).cast("long")

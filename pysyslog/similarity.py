@@ -1,14 +1,17 @@
 """Similarity search over embedding columns (array<float>).
 
 * brute_force_topk — exact cosine top-k: the query set is broadcast
-  (small), the corpus side streams; the dot product is a built-in
-  zip_with/aggregate expression (JVM-side), ranking is a bounded
-  window.  This is the correctness baseline and the oracle-checked op.
-* lsh_topk — random-hyperplane LSH: deterministic hash-derived planes
-  give each vector a b-bit signature; candidates come from matching
-  signature buckets (with multi-probe on the query side), then exact
-  cosine re-ranks.  The scale path: bucket join instead of full cross
-  product.
+  (small), the corpus side streams; scoring is `cosine_udf`, the
+  bit-exact Arrow twin of the JVM `cosine`; ranking is two-stage.
+  This is the correctness baseline.
+* lsh_topk / ivf_topk — ANN: each builds only bucket keys (a
+  hash-derived hyperplane signature and its 1-bit flips; the nearest
+  hash-sampled centroid lists) for `_probe_topk`, the one probe join
+  and exact cosine re-rank — a bucket join, not a cross product.
+* embedding_near_dup_pairs — multi-band hyperplane LSH through
+  dedup.band_pairs, then an exact cosine verify.
+
+`_rank_topk` is the one top-k rank window.
 """
 
 from __future__ import annotations
@@ -17,6 +20,8 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from .dedup import band_pairs
 
 
 def _norm(col):
@@ -150,30 +155,50 @@ def brute_force_topk(
         cosine_udf()(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
     )
     salt = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts))
-    w1 = Window.partitionBy(query_id_col, "__salt").orderBy(
-        F.desc("cos_sim"), F.col(id_col)
+    survivors = _rank_topk(
+        scored.withColumn("__salt", salt), k, [query_id_col, "__salt"], id_col
+    ).drop("rank", "__salt")
+    return _rank_topk(survivors, k, query_id_col, id_col)
+
+
+def _rank_topk(scored: DataFrame, k: int, query_id_col, id_col: str) -> DataFrame:
+    """The top-k rank window: `rank` = row_number per `query_id_col` (a
+    column name, or a list of them) by cos_sim descending, ties broken
+    by id; rows past k are dropped."""
+    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.col(id_col))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _probe_topk(
+    corpus: DataFrame, corpus_keys, queries: DataFrame, probe_keys, k: int,
+    id_col: str, vec_col: str, query_id_col: str,
+) -> DataFrame:
+    """Bucket-probe top-k: corpus rows and broadcast queries explode
+    their key arrays (`corpus_keys`, `probe_keys`: array columns over
+    each side), join on the key, and every (query, row) pair is scored
+    once with the exact cosine, then ranked."""
+    c = corpus.select(
+        F.col(id_col), F.col(vec_col), F.explode(corpus_keys).alias("__key")
     )
-    survivors = (
-        scored.withColumn("__salt", salt)
-        .withColumn("__r1", F.row_number().over(w1))
-        .filter(F.col("__r1") <= k)
-        .drop("__r1", "__salt")
+    q = queries.select(
+        F.col(query_id_col), F.col(vec_col).alias("__qv"),
+        F.explode(probe_keys).alias("__key"),
     )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cos_sim"), F.col(id_col)
+    scored = (
+        c.join(F.broadcast(q), "__key")
+        .dropDuplicates([query_id_col, id_col])
+        .select(
+            F.col(query_id_col), F.col(id_col),
+            cosine(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
+        )
     )
-    return (
-        survivors.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(scored, k, query_id_col, id_col)
 
 
 def _plane(dim: int, p: int, seed: int = 42):
     """Deterministic pseudo-random hyperplane: component j of plane p is
     a hash-derived value in [-1, 1) — stateless, identical on every
     executor and in any re-run."""
-    import numpy as np
-
     j = np.arange(dim, dtype=np.uint64)
     x = (j + np.uint64(p * 0x9E3779B9) + np.uint64(seed)) * np.uint64(0x2545F4914F6CDD1D)
     x ^= x >> np.uint64(29)
@@ -190,25 +215,14 @@ def lsh_topk(
     own bucket plus all 1-bit-flip neighbors), exact cosine re-rank."""
     # one band of n_planes bits: the whole signature
     sig = banded_signature_udf(dim, 1, n_planes)
-    c = corpus.withColumn("__sig", sig(F.col(vec_col))[0])
     q = queries.withColumn("__sig", sig(F.col(vec_col))[0])
     probes = F.array(
         F.col("__sig"), *[
             F.col("__sig").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)
         ]
     )
-    q_probed = q.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qv"),
-        F.explode(probes).alias("__sig"),
-    )
-    cand = c.join(F.broadcast(q_probed), "__sig").select(
-        F.col(query_id_col),
-        F.col(id_col),
-        cosine(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
-    ).dropDuplicates([query_id_col, id_col])
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.col(id_col))
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _probe_topk(corpus, sig(F.col(vec_col)), q, probes, k,
+                       id_col, vec_col, query_id_col)
 
 
 def ivf_topk(
@@ -225,10 +239,8 @@ def ivf_topk(
     regardless of id/insertion order (smallest-ids sampling correlates
     with ingest order and collapses recall on clustered corpora).  No
     iterative k-means, so the operator is a single pass and retry-stable;
-    at 100 TB the assignment is one mapInPandas sweep and the probe join
-    shuffles only candidates, never the corpus."""
-    import numpy as np
-
+    at 100 TB the assignment is one pandas-UDF column over the corpus
+    and the probe join shuffles only candidates, never the corpus."""
     cents = [
         (r[0], np.array(r[1], dtype=np.float64))
         for r in corpus.select(id_col, vec_col)
@@ -259,21 +271,9 @@ def ivf_topk(
     # land in more than one inverted list, trading n_assign× index size
     # for recall — the standard IVF recall lever when data is spread
     # thin across lists
-    c_assigned = corpus.withColumn(
-        "__list", F.explode(_top_lists(n_assign)(F.col(vec_col)))
-    )
-    q_probed = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qv"),
-        F.explode(_top_lists(n_probe)(F.col(vec_col))).alias("__list"),
-    )
-    cand = c_assigned.join(F.broadcast(q_probed), "__list").select(
-        F.col(query_id_col),
-        F.col(id_col),
-        cosine(F.col(vec_col), F.col("__qv")).alias("cos_sim"),
-    ).dropDuplicates([query_id_col, id_col])
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.col(id_col))
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _probe_topk(corpus, _top_lists(n_assign)(F.col(vec_col)),
+                       queries, _top_lists(n_probe)(F.col(vec_col)), k,
+                       id_col, vec_col, query_id_col)
 
 
 def banded_signature_udf(dim: int, n_bands: int, rows_per_band: int,
@@ -282,7 +282,6 @@ def banded_signature_udf(dim: int, n_bands: int, rows_per_band: int,
     sign bits of planes [b*r, (b+1)*r) into one int.  Planes are the
     deterministic hash-derived family of `_plane`, indexed
     globally, so the oracle SQL can replay any (band, bit) exactly."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, IntegerType
 
@@ -350,18 +349,9 @@ def embedding_near_dup_pairs(
     collapse BEFORE the cosine verify, so each surviving pair is
     scored once."""
     sigs = banded_signature_udf(dim, n_bands, rows_per_band, seed)
-    s = corpus.select(
-        F.col(id_col), F.col(vec_col),
-        F.posexplode(sigs(F.col(vec_col))).alias("__band", "__sig"),
-    )
-    a = s.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-                 "__band", "__sig")
-    b = s.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
-                 "__band", "__sig")
+    va, vb = F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b")
     return (
-        a.join(b, ["__band", "__sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .select("id_a", "id_b", cosine(F.col("va"), F.col("vb")).alias("cos_sim"))
+        band_pairs(corpus, id_col, sigs(F.col(vec_col)), vec_col)
+        .select("id_a", "id_b", cosine(va, vb).alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
     )

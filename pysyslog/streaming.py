@@ -27,6 +27,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .multiline import CONTINUATION_LEADS
 from .options import ParserOptions
 from .parser import parse_syslog
 
@@ -79,7 +80,7 @@ def make_reassemble_fn(timeout_ms: int = 60_000):
             for line in pdf["line"]:
                 if line is None:
                     continue
-                if line.startswith((" ", "\t")):
+                if line.startswith(CONTINUATION_LEADS):
                     buffer = (buffer + "\n" + line) if buffer else line
                 else:
                     if buffer:

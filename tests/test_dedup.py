@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pysyslog.dedup import (
@@ -174,3 +175,21 @@ def test_minhash_udf_matches_jvm_shingles_on_edge_whitespace(spark):
         ).collect()
     }
     assert sigs == jvm
+
+
+def test_lsh_rejects_short_signature(spark):
+    """Fewer signature columns than bands x rows_per_band raises at the
+    call: a missing band would key every document on md5('')."""
+    sigs = minhash_signatures(_df(spark), num_hashes=8)
+    with pytest.raises(ValueError, match="signature columns"):
+        lsh_candidate_pairs(sigs, bands=4, rows_per_band=4)
+    lsh_candidate_pairs(sigs, bands=2, rows_per_band=4)  # exactly enough
+
+
+def test_simhash_udf_rejects_bad_width():
+    from pysyslog.dedup import simhash_udf
+
+    for bits in (0, 65):
+        with pytest.raises(ValueError, match="bits"):
+            simhash_udf(bits)
+    simhash_udf(64)

@@ -60,6 +60,47 @@ def test_parse_multiline_records(spark):
     assert parsed[3]["program_name"] == "cron"
 
 
+# \f-, \v- and \r-led lines continue a record under Java's \s; an
+# NBSP-led line starts one (Java's \s is ASCII-only)
+ODD_WS_LINES = [
+    "May 19 22:03:29 janus sshd[1]: one",
+    "\fformfeed continuation",
+    "\x0bvtab continuation",
+    "\rcr continuation",
+    "May 19 22:03:30 janus sshd[1]: two",
+    "\u00a0nbsp-led line",
+    "May 19 22:03:31 janus cron[1]: three",
+]
+
+
+def test_streaming_and_batch_reassembly_agree_on_continuations(spark):
+    """The streaming transition function and the batch window split
+    records on the same continuation rule: Java's regex whitespace."""
+    import pandas as pd
+    from test_streaming_agg import _FakeState
+
+    from pysyslog.streaming import make_reassemble_fn
+
+    df = spark.createDataFrame(
+        [("s1", i, l) for i, l in enumerate(ODD_WS_LINES)],
+        "source string, line_no long, line string",
+    )
+    batch = [r["raw"] for r in reassemble(df).orderBy("record_no").collect()]
+
+    fn = make_reassemble_fn(1000)
+    st = _FakeState()
+    lines = pd.DataFrame({"line_no": range(len(ODD_WS_LINES)), "line": ODD_WS_LINES})
+    out = list(fn(("s1",), [lines], st))
+    # the timeout flushes the record still buffered
+    st.hasTimedOut = True
+    out += list(fn(("s1",), [], st))
+    streamed = [raw for pdf in out for raw in pdf["raw"]]
+
+    assert streamed == batch
+    assert len(batch) == 4
+    assert batch[0] == "\n".join(ODD_WS_LINES[:4])
+
+
 def test_streaming_reassembly(spark, tmp_path):
     import json
     import time

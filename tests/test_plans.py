@@ -84,6 +84,26 @@ def test_minhash_signatures_shuffle_free(spark):
     assert "Exchange" not in plan, plan
 
 
+def _final_plan(df) -> str:
+    """The adaptive plan after a run, without its initial-plan section."""
+    df.collect()
+    return _plan(df).split("== Initial Plan ==")[0]
+
+
+def test_near_dups_compute_each_signature_once(spark):
+    """MinHash and SimHash near-dups band their signatures from one
+    projection (dedup.band_pairs): one signature UDF per side of the
+    candidate self-join, and no per-band union re-running the UDF."""
+    from pysyslog.dedup import minhash_near_dups, simhash_near_dups
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    for df in (minhash_near_dups(docs, threshold=0.5),
+               simhash_near_dups(docs, max_hamming=3)):
+        plan = _final_plan(df)
+        assert plan.count("ArrowEvalPython") <= 2, plan
+        assert "Union" not in plan, plan
+
+
 def test_embedding_near_dup_is_banded_bucket_join(spark):
     """The embedding near-dup candidate stage must be a bucket
     equi-join on (band, signature) — never a cartesian/nested-loop
